@@ -8,10 +8,12 @@ Architecture (Spark-first, not a port):
   — the analogue of the reference's MQ MsgPack stream + etcd watch
   (reference: core/reader/replicate_channel_manager.go:1169-1491 and
   core/reader/etcd_op.go:182-298).
-- **Structured Streaming** tails the changelog (``readStream`` +
-  ``foreachBatch``); each micro-batch is deduped per (conv_id, turn_idx)
-  with monotonic (ts, op-rank, lsn) ordering and MERGEd into a snapshot
-  table exactly once (epoch-idempotent commit).
+- A driver-side **poll loop** tails the changelog through the WAL gate
+  (``streaming/wal.py``), which applies its files in lsn order; each
+  epoch is deduped per (conv_id, turn_idx) with monotonic (ts, op-rank,
+  lsn) ordering and MERGEd into a snapshot table exactly once
+  (epoch-idempotent commit). Kafka topics tail as a Structured Streaming
+  query (``readStream`` + ``foreachBatch``).
 - The target is a **SnapshotTable**: a Parquet + versioned-JSON-manifest
   table format providing atomic commits, snapshot ids, schema evolution,
   partition-drop watermarks and time travel. It is the local stand-in for
@@ -20,7 +22,7 @@ Architecture (Spark-first, not a port):
   real Iceberg catalog unchanged.
 
 Subpackages:
-  sources/    changelog generator + batch/stream readers
+  sources/    changelog generator + readers (batch files, Kafka stream)
   plans/      snapshot table format (manifests, commit protocol, lineage)
   operators/  apply/merge core, document dedup family, similarity search
   functions/  vectorized column functions (text analysis, vector math)

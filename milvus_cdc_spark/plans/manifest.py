@@ -1502,6 +1502,8 @@ def dlq_replay_dir(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from milvus_cdc_spark.streaming.wal import DLQ_REPLAY_PREFIX
+
     os.makedirs(log_dir, exist_ok=True)
     by_epoch: dict[str, list] = {}
     for ep, path in _dlq_files(dlq_dir):
@@ -1520,8 +1522,10 @@ def dlq_replay_dir(
             for f in merged.schema
         ]
         merged = merged.cast(pa.schema(fields))
-        dst = os.path.join(log_dir, f"dlq-replay-{tag}-{ep}.parquet")
-        tmp = dst + ".inprogress"
+        name = f"{DLQ_REPLAY_PREFIX}{tag}-{ep}.parquet"
+        dst = os.path.join(log_dir, name)
+        # hidden temp name: a tailing task never lists the partial file
+        tmp = os.path.join(log_dir, f".{name}.inprogress")
         pq.write_table(merged, tmp)
         os.replace(tmp, dst)  # atomic: the tail never sees a partial file
         replayed += merged.num_rows

@@ -3,12 +3,8 @@ from milvus_cdc_spark.sources.changelog_gen import (
     generate_multi_changelog,
     write_changelog,
 )
-from milvus_cdc_spark.sources.changelog import read_changelog, read_changelog_stream
-from milvus_cdc_spark.sources.debezium import (
-    read_debezium,
-    read_debezium_stream,
-    to_debezium,
-)
+from milvus_cdc_spark.sources.changelog import read_changelog
+from milvus_cdc_spark.sources.debezium import read_debezium, to_debezium
 from milvus_cdc_spark.sources.kafka import (
     decode_kafka_batch,
     encode_kafka_batch,
@@ -23,8 +19,6 @@ __all__ = [
     "generate_multi_changelog",
     "write_changelog",
     "read_changelog",
-    "read_changelog_stream",
     "read_debezium",
-    "read_debezium_stream",
     "to_debezium",
 ]

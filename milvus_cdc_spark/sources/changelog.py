@@ -1,10 +1,11 @@
-"""Changelog readers: batch scan and streaming tail.
+"""Changelog reader: batch scan of a changelog directory.
 
-Reference analogues: batch scan ~ bootstrap meta snapshot
-(/root/reference/core/reader/etcd_op.go:557-623); streaming tail ~ MQ
-subscribe from a seek position (core/reader/stream_creator.go:39-159).
-Seek/resume is owned by the Structured Streaming checkpoint (the analogue
-of positions persisted per pack, server/cdc_impl.go:844-873).
+Reference analogue: bootstrap meta snapshot (reference
+core/reader/etcd_op.go:557-623). The live tail is not a reader here:
+file tasks poll the changelog directory through the WAL gate
+(streaming/wal.py), which orders the files by lsn, and the gate's ledger
+holds the position (the analogue of positions persisted per pack,
+server/cdc_impl.go:844-873).
 """
 
 from __future__ import annotations
@@ -15,26 +16,7 @@ from milvus_cdc_spark.schemas import CHANGELOG_SCHEMA, MULTI_CHANGELOG_SCHEMA
 
 
 def read_changelog(
-    spark: SparkSession, path: str, multi_table: bool = False
+    spark: SparkSession, *paths: str, multi_table: bool = False
 ) -> DataFrame:
     schema = MULTI_CHANGELOG_SCHEMA if multi_table else CHANGELOG_SCHEMA
-    return spark.read.schema(schema).parquet(path)
-
-
-def read_changelog_stream(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int | None = None,
-    multi_table: bool = False,
-) -> DataFrame:
-    """Tail the changelog directory as a file-source stream.
-
-    ``maxFilesPerTrigger`` is the pacing knob — the analogue of the
-    reference's bounded read channel (readChanLen: 10,
-    /root/reference/doc/cdc-usage.md:81-82).
-    """
-    schema = MULTI_CHANGELOG_SCHEMA if multi_table else CHANGELOG_SCHEMA
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(path)
+    return spark.read.schema(schema).parquet(*paths)

@@ -262,9 +262,9 @@ def generate_multi_changelog(
 def write_changelog(df: DataFrame, path: str, n_files: int = 16) -> None:
     """Write the changelog as ``n_files`` lsn-ranged parquet files.
 
-    Range-partitioned by lsn so the file-stream source consumes the log
-    roughly in order (the analogue of MQ seek order), though the apply
-    path is correct under ANY batching (see operators/apply.py).
+    Range-partitioned by lsn so each file carries one contiguous lsn
+    range — the shape the WAL gate (streaming/wal.py) orders files by,
+    the analogue of MQ seek order.
 
     Row groups are capped at 4 MB: a parquet file is only splittable at
     row-group boundaries, and a single-row-group file caps every

@@ -8,9 +8,9 @@ change with ``before``/``after`` row images, an ``op`` code
 (``c``\\|``r``\\|``u``\\|``d``), the event timestamp ``ts_ms`` (plus the
 microsecond-precision ``ts_us`` Debezium 2.5 added), and a ``source``
 block carrying the log position (``lsn``). This module normalizes a
-directory/stream of such messages (JSON lines) into ``CHANGELOG_SCHEMA``
-so the whole engine — merge, DDL, DLQ, checkpointing — runs unmodified on
-a Debezium feed:
+directory of such messages (JSON lines) into ``CHANGELOG_SCHEMA`` so the
+whole engine — ordering, merge, DDL, DLQ — runs unmodified on a Debezium
+feed:
 
     op c (create) / r (snapshot read) → INSERT   (row image = after)
     op u (update)                     → UPSERT   (row image = after)
@@ -124,28 +124,10 @@ def _normalize(
 
 
 def read_debezium(
-    spark: SparkSession, path: str, multi_table: bool = False
+    spark: SparkSession, *paths: str, multi_table: bool = False
 ) -> DataFrame:
-    """Batch scan of a directory of Debezium JSON-lines files."""
-    return _normalize(spark.read.text(path), multi_table=multi_table)
-
-
-def read_debezium_stream(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int | None = None,
-    multi_table: bool = False,
-) -> DataFrame:
-    """Tail a directory of Debezium JSON-lines files as a file-source
-    stream — drop-in for ``read_changelog_stream`` in ``CdcTask`` /
-    ``MultiCdcTask`` (pass ``source='debezium'``); checkpointing, pacing,
-    and the malformed-event policy are unchanged."""
-    reader = spark.readStream
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    return _normalize(reader.text(path), multi_table=multi_table)
+    """Batch scan of Debezium JSON-lines files (directories or files)."""
+    return _normalize(spark.read.text(*paths), multi_table=multi_table)
 
 
 def _image() -> Column:

@@ -183,8 +183,8 @@ def read_kafka_stream(
     max_offsets_per_trigger: int | None = None,
     options: dict | None = None,
 ) -> DataFrame:
-    """Tail a Kafka topic as the engine's changelog stream — drop-in for
-    ``read_changelog_stream`` (pass ``source='kafka'`` to CdcTask /
+    """Tail a Kafka topic as the engine's changelog stream — the one
+    Structured Streaming source (pass ``source='kafka'`` to CdcTask /
     MultiCdcTask). ``max_offsets_per_trigger`` is the pacing knob (the
     analogue of the reference's bounded read channel, readChanLen: 10,
     doc/cdc-usage.md:81-82). Requires the spark-sql-kafka connector on

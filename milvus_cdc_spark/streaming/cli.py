@@ -284,7 +284,7 @@ def main(argv: list[str] | None = None) -> int:
                    help="comma list of collections to replicate ('*' = all)")
     p.add_argument("--excludes", default=None,
                    help="comma list of collections/namespaces to skip")
-    p.add_argument("--checkpoint", help="streaming checkpoint dir (task commands)")
+    p.add_argument("--checkpoint", help="task checkpoint dir: WAL ledger + status (task commands)")
     p.add_argument("--name", help="task name in the registry")
     p.add_argument("--tasks-dir", help="task registry directory")
     p.add_argument("--drop-checkpoint", action="store_true",
@@ -319,9 +319,9 @@ def main(argv: list[str] | None = None) -> int:
                         "(O(batch) epoch writes; compact folds)")
     p.add_argument("--history", default=None,
                    help="Debezium schema-change topic dir (JSON lines): "
-                        "decoded into ADD/WIDEN_COLUMN events and unioned "
-                        "into every trigger (idempotent re-apply) — live "
-                        "DDL for --source debezium tasks")
+                        "new topic files decode into ADD/WIDEN/DROP_COLUMN "
+                        "events that ride the next epoch — live DDL for "
+                        "--source debezium tasks")
     p.add_argument("--source", choices=["parquet", "debezium", "kafka"],
                    default="parquet",
                    help="changelog encoding: native parquet files, "

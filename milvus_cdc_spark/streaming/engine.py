@@ -1,20 +1,24 @@
-"""Streaming engine: tail the changelog, apply each micro-batch exactly once.
+"""Task engine: tail the changelog, apply each epoch exactly once.
 
 The analogue of the reference's task runtime
 (/root/reference/server/cdc_impl.go:504-597 ``startInternal`` building the
-reader→writer graph, :796-877 the DML apply loop). A *task* here is one
-Structured Streaming query:
+reader→writer graph, :796-877 the DML apply loop). A parquet or Debezium
+*file task* is one driver-side poll loop over one ordering mechanism:
 
-    changelog dir --readStream--> foreachBatch(apply_batch) --> SnapshotTable
+    changelog dir --WalGate (list, lsn-order, intent)--> apply_batch --> SnapshotTable
 
-- **Checkpoint/resume**: the streaming checkpoint dir persists source
-  offsets (reference: positions persisted per pack,
-  server/cdc_impl.go:844-873); pause = stop the query, resume = start
-  again with the same checkpoint. A batch replayed after a crash hits the
-  epoch-idempotence gate in apply_batch and is skipped.
-- **Pacing**: maxFilesPerTrigger bounds batch size (reference:
-  readChanLen/backpressure, doc/cdc-usage.md:81-82).
-- **Error pause**: a failing batch stops the query with the reason
+- **Position/resume**: the WAL ledger (``<checkpoint>/wal_ledger.json``,
+  streaming/wal.py) records which files applied under which epoch
+  (reference: positions persisted per pack, server/cdc_impl.go:844-873);
+  pause = stop the loop, resume = start it again over the same ledger. A
+  group replayed after a crash hits the epoch-idempotence gate in
+  apply_batch and is skipped.
+- **Pacing**: ``max_files_per_trigger`` bounds an epoch's file group
+  (reference: readChanLen/backpressure, doc/cdc-usage.md:81-82). A
+  continuous task ticks back to back while groups apply and at most once
+  per second while idle; an ``available_now`` run returns once every
+  listed file has applied.
+- **Error pause**: a failing epoch stops the loop with the reason
   recorded (reference pause-on-error, server/cdc_impl.go:972-1003).
 - **Multi-collection tasks** (``MultiCdcTask``) drain a MULTIPLEXED log:
   per-collection slices are MERGEd CONCURRENTLY (reference: one goroutine
@@ -22,6 +26,9 @@ Structured Streaming query:
   and namespace (database) DDL — CREATE_NAMESPACE/DROP_NAMESPACE, the
   CreateDatabase/DropDatabase analogue (core/writer/channel_writer.go:
   102-114) — routes ``<ns>.<table>`` names into per-namespace directories.
+
+Kafka tasks are the one Structured Streaming query: the broker's
+per-partition order and Spark's offset checkpoint replace the gate.
 """
 
 from __future__ import annotations
@@ -37,7 +44,12 @@ from pyspark.sql import SparkSession
 from milvus_cdc_spark.operators.apply import apply_batch
 from milvus_cdc_spark.plans.manifest import SnapshotTable
 from milvus_cdc_spark.schemas import TRANSCRIPTS_BASE_COLUMNS
-from milvus_cdc_spark.sources.changelog import read_changelog_stream
+from milvus_cdc_spark.sources.changelog import read_changelog
+from milvus_cdc_spark.sources.debezium import read_debezium
+
+# a continuous file task starts at most one idle tick per this many
+# seconds (the cadence of the processingTime trigger it replaced)
+_IDLE_TICK_SEC = 1.0
 
 
 class FailProtect:
@@ -64,28 +76,6 @@ class FailProtect:
         self.failure_ts.append(now)
         self.failure_ts = [t for t in self.failure_ts if now - t <= self.window_sec]
         return len(self.failure_ts) >= self.max_failures
-
-
-def _union_history(
-    spark, batch_df, history_path: str | None, multi_table: bool = False
-):
-    """Union the decoded Debezium schema-history stream into a micro-
-    batch. The history dir is re-decoded IN FULL each trigger: decoding
-    needs every table's previous column state (consecutive-state diff),
-    the topic is DDL-scale by nature, and re-applied ADD/WIDEN events
-    are idempotent at the manifest (skip-if-exists / lattice-max) — so
-    live DDL costs one tiny text scan per trigger and no extra state."""
-    if not history_path:
-        return batch_df
-    if not os.path.isdir(history_path) or not any(
-        not f.startswith(("_", ".")) for f in os.listdir(history_path)
-    ):
-        return batch_df  # topic not created yet / empty
-    from milvus_cdc_spark.sources.debezium import read_debezium_history
-
-    return batch_df.unionByName(
-        read_debezium_history(spark, history_path, multi_table=multi_table)
-    )
 
 
 def _kafka_stream(
@@ -194,6 +184,39 @@ class _TaskLifecycle:
     def start(self, available_now: bool = False):  # pragma: no cover - abstract
         raise NotImplementedError
 
+    def _poll(
+        self,
+        work: Callable[[threading.Event], bool],
+        available_now: bool,
+        idle_sec: float,
+    ):
+        """Start the task's poll loop. ``work(stop)`` runs one tick and
+        returns whether it did anything; ticks run back to back while it
+        does. An idle tick ends an ``available_now`` run once
+        ``_drained()`` holds, and otherwise the next tick starts
+        ``idle_sec`` after the idle one started."""
+
+        def _loop(stop_event):
+            while not stop_event.is_set():
+                t0 = time.monotonic()
+                if work(stop_event):
+                    continue
+                if available_now and self._drained():
+                    return
+                stop_event.wait(max(0.0, idle_sec - (time.monotonic() - t0)))
+
+        self.query = _LoopQuery(_loop).start()
+        self._write_status("Running")
+        return self.query
+
+    def _drained(self) -> bool:
+        """An idle tick means drained, unless the source says otherwise."""
+        return True
+
+    def _stall_reason(self) -> str:
+        """What a timed-out drain was waiting on (pause-reason suffix)."""
+        return ""
+
     def pause(self, reason: str | None = None):
         if self.query is not None:
             self.query.stop()
@@ -201,17 +224,27 @@ class _TaskLifecycle:
         self._join_folds()
         self._write_status("Paused", reason=reason)
 
+    def _pause_on_timeout(self) -> None:
+        # stop first, so the stall reason reads a quiescent source
+        if self.query is not None:
+            self.query.stop()
+            self.query = None
+        self.pause(reason="drain wall timeout" + self._stall_reason())
+
     def resume(self, available_now: bool = False):
         return self.start(available_now=available_now)
 
     def wait_drained(self, timeout_sec: float = 600.0) -> bool:
-        """Block until an availableNow run finishes; record errors."""
+        """Block until an availableNow run finishes; record errors. A
+        timeout pauses the task, naming what the drain was waiting on."""
         assert self.query is not None
         try:
             ok = self.query.awaitTermination(timeout_sec)
             if ok:
                 self._join_folds()
                 self._write_status("Stopped")
+            else:
+                self._pause_on_timeout()
             return bool(ok)
         except Exception as e:  # error → pause with reason (reference C4)
             self.last_error = str(e)
@@ -226,7 +259,7 @@ class _TaskLifecycle:
         poll_sec: float = 0.3,
     ) -> bool:
         """Drain with error-rate protection: restart after a transient
-        failure (checkpoint + per-epoch idempotence make the replay safe),
+        failure (ledger + per-epoch idempotence make the replay safe),
         pause with reason once the failure rate trips ``protect``.
 
         ``pause_check`` is polled between ``poll_sec`` await slices so a
@@ -246,15 +279,14 @@ class _TaskLifecycle:
                     # re-drain return instantly without reading anything
                     # new; restarting is free when there is nothing to do
                     # (the availableNow run sees no new input and stops).
-                    # Inside the try: start() itself can now fail — the
-                    # WAL gate replays a crash-parked intent there, and a
-                    # poison group must route into fail-protect like any
-                    # other batch failure.
+                    # Inside the try: a Kafka query's start() can fail,
+                    # and must route into fail-protect like any other
+                    # batch failure.
                     self.start(available_now=True)
                 while True:
                     remaining = deadline - time.time()
                     if remaining <= 0:
-                        self.pause(reason="drain wall timeout")
+                        self._pause_on_timeout()
                         return False
                     if pause_check is not None and pause_check():
                         self.pause(reason="pause requested")
@@ -268,7 +300,7 @@ class _TaskLifecycle:
                         self._write_status("Stopped")
                         return True
                     if pause_check is None:
-                        self.pause(reason="drain wall timeout")
+                        self._pause_on_timeout()
                         return False
             except Exception as e:
                 self.query = None
@@ -311,14 +343,21 @@ class _TaskLifecycle:
             )
 
 
-class CdcTask(_TaskLifecycle):
-    """One replication task: changelog path → SnapshotTable."""
+class _FileTask(_TaskLifecycle):
+    """What single- and multi-collection replication tasks share: one
+    constructor validation block, the WAL-gated file source on the poll
+    loop, and the Kafka query. Subclasses set ``_multi`` (which changelog
+    schema a file group is read with) and provide ``_apply_epoch(df,
+    epoch) -> skipped`` (how one epoch applies; True when it was skipped
+    as already committed) and ``_table_roots()`` (the tables they
+    write)."""
+
+    _multi = False
 
     def __init__(
         self,
         spark: SparkSession,
         changelog_path: str,
-        table_root: str,
         checkpoint_dir: str,
         *,
         max_files_per_trigger: int | None = 4,
@@ -331,7 +370,6 @@ class CdcTask(_TaskLifecycle):
         on_violation: str = "fail",
         source: str = "parquet",
         history_path: str | None = None,
-        wal_order: bool = True,
         kafka_options: dict | None = None,
     ):
         if source not in ("parquet", "debezium", "kafka"):
@@ -367,32 +405,10 @@ class CdcTask(_TaskLifecycle):
         # downstream is identical
         self.source = source
         self.kafka_options = dict(kafka_options or {})
-        # WAL-regime batch formation (streaming/wal.py): files apply in
-        # lsn order regardless of the file-stream source's mtime-ordered
-        # delivery — REQUIRED for OP_PATCH correctness (a patch must not
-        # commit before its anchor's epoch, schemas.OP_PATCH). Default on;
-        # wal_order=False restores raw stream batching for logs known to
-        # be order-insensitive (no patches) with non-WAL producers. Not
-        # applicable to Kafka: the broker already delivers each partition
-        # in order (the reference's per-channel contract) and there are no
-        # files to re-form — run patch-carrying topics single-partition or
-        # conv_id-keyed (sources/kafka.py ordering contract).
-        self.wal_order = wal_order and source != "kafka"
-        # Debezium schema-change topic directory: re-decoded IN FULL each
-        # trigger (history topics are DDL-scale; decoding needs every
-        # table's previous column state) and unioned into the batch —
-        # re-applied ADD/WIDEN events are idempotent at the manifest
-        # (skip-if-exists / lattice-max), so live DDL needs no extra
-        # bookkeeping. See sources/debezium.py::read_debezium_history.
-        self.history_path = history_path
-        self.table = SnapshotTable(table_root)
-        if not self.table.exists():
-            self.table.create(
-                TRANSCRIPTS_BASE_COLUMNS, n_buckets=n_buckets,
-                write_mode=write_mode,
-            )
         self.max_files_per_trigger = max_files_per_trigger
         self.salt_partitions = salt_partitions
+        self.n_buckets = n_buckets
+        self.write_mode = write_mode
         # merge-on-read housekeeping: compact at the NEXT epoch boundary
         # once any bucket's delta chain exceeds this many files, bounding
         # read-side resolution cost without blocking the hot path mid-epoch
@@ -400,8 +416,14 @@ class CdcTask(_TaskLifecycle):
         # Iceberg terms this is rewrite_data_files on a file-count trigger)
         self.auto_compact_files = auto_compact_files
         self._init_lifecycle(checkpoint_dir)
+        # the WAL gate IS the file source: files apply in lsn order
+        # whatever order they land in — REQUIRED for OP_PATCH correctness
+        # (a patch must not commit before its anchor's epoch,
+        # schemas.OP_PATCH). Kafka has no files to re-form: the broker
+        # delivers each partition in order (the reference's per-channel
+        # contract; sources/kafka.py ordering contract).
         self._gate = None
-        if self.wal_order:
+        if source != "kafka":
             from milvus_cdc_spark.streaming.wal import WalGate
 
             self._gate = WalGate(
@@ -410,24 +432,44 @@ class CdcTask(_TaskLifecycle):
                 # debezium topic dumps carry no parquet footers; their
                 # files are named in topic order, so name order IS lsn
                 # order (documented producer contract)
-                order="lsn" if self.source == "parquet" else "name",
-                range_fn=(
-                    self._lsn_range_fn if self.source == "parquet" else None
-                ),
+                order="lsn" if source == "parquet" else "name",
+                range_fn=self._lsn_range_fn if source == "parquet" else None,
             )
-            # upgrade path: inherit a pre-gate checkpoint's delivered set
-            # so historical files neither block nor collide epoch ids
-            self._gate.bootstrap_from_checkpoint(checkpoint_dir)
+            if not self._gate.has_ledger():
+                # a fresh ledger numbers epochs from 0, which the manifest
+                # gate of a table that already committed them would skip
+                for root in self._table_roots():
+                    t = SnapshotTable(root)
+                    if t.exists() and any(
+                        int(e) >= 0 for e in t.current().epochs
+                    ):
+                        raise ValueError(
+                            f"table {root} already holds committed epochs "
+                            f"but {self._gate.ledger_path} is missing: a "
+                            "new ledger would restart epoch ids at 0 and "
+                            "the table would skip them — restore the "
+                            "ledger or replicate into a fresh table"
+                        )
+        # Debezium schema-change topic directory, decoded CURSORED: only
+        # not-yet-committed topic files decode (sources/debezium.py::
+        # HistoryCursor), and the decoded DDL rides the next epoch
+        self.history_path = history_path
         self._hist = None
-        if self.history_path and self._gate is not None:
+        if history_path:
             from milvus_cdc_spark.sources.debezium import HistoryCursor
 
             self._hist = HistoryCursor(
-                self.history_path,
+                history_path,
                 os.path.join(checkpoint_dir, "history_cursor.json"),
             )
 
-    # -- the re-rooted plain-reader apply ---------------------------------
+    # -- the WAL-gated file source --------------------------------------------
+    def _read(self, files: list[str]):
+        """One file group as a plain batch DataFrame (vectorized scan)."""
+        if self.source == "debezium":
+            return read_debezium(self.spark, *files, multi_table=self._multi)
+        return read_changelog(self.spark, *files, multi_table=self._multi)
+
     def _lsn_range_fn(self, path: str):
         """Footer stats first; a schema'd Spark scan as the documented
         fallback for stat-less files. A parquet file with NO lsn values
@@ -435,19 +477,16 @@ class CdcTask(_TaskLifecycle):
         applies immediately and the malformed-event policy owns it LOUDLY
         (fail/dlq) — silent queue-blocking is reserved for files that are
         genuinely unreadable (mid-write)."""
-        from milvus_cdc_spark.streaming.wal import parquet_lsn_range
+        from milvus_cdc_spark.streaming import wal
 
-        rng = parquet_lsn_range(path)
+        rng = wal.parquet_lsn_range(path)
         if rng is not None:
             return rng
         try:
             from pyspark.sql import functions as F
 
-            from milvus_cdc_spark.schemas import CHANGELOG_SCHEMA
-
             r = (
-                self.spark.read.schema(CHANGELOG_SCHEMA)
-                .parquet(path)
+                read_changelog(self.spark, path)
                 .agg(F.min("lsn"), F.max("lsn"))
                 .collect()[0]
             )
@@ -460,52 +499,29 @@ class CdcTask(_TaskLifecycle):
     def _apply_files(
         self, files: list[str], epoch: int, with_history: bool = True
     ) -> None:
-        """Apply one file-group as one epoch. The plain batch reader is a
-        deliberate re-root: the FileStreamSource's relation bypasses the
-        vectorized-scan fast path (measured 4-13x per-row CPU inflation on
-        map columns), while the file list IS the group's exact,
-        checkpoint-replayable identity — a pure physical swap with
-        identical contents and semantics."""
-        if self.source == "debezium":
-            from milvus_cdc_spark.sources.debezium import _normalize
-
-            batch_df = _normalize(self.spark.read.text(*files))
-        else:
-            from milvus_cdc_spark.schemas import CHANGELOG_SCHEMA
-
-            batch_df = self.spark.read.schema(CHANGELOG_SCHEMA).parquet(*files)
-        use_hist = self._hist is not None and with_history
-        if use_hist:
-            # CURSORED history decode: only not-yet-committed topic files
-            # decode (sources/debezium.py::HistoryCursor); the cursor
-            # advances AFTER the epoch commits, so a crash replays the
-            # same DDL into the idempotent manifest (at-least-once)
-            ev = self._hist.events(self.spark)
+        """Apply one file group as one epoch."""
+        batch_df = self._read(files)
+        hist = self._hist if with_history else None
+        if hist is not None:
+            # the cursor advances AFTER the epoch commits, so a crash
+            # replays the same DDL into the idempotent manifest
+            ev = hist.events(self.spark, multi_table=self._multi)
             if ev is not None:
                 batch_df = batch_df.unionByName(ev)
-        res = apply_batch(
-            self.spark,
-            self.table,
-            batch_df,
-            epoch,
-            salt_partitions=self.salt_partitions,
-            on_malformed=self.on_malformed,
-            constraints=self.constraints,
-            on_violation=self.on_violation,
-        )
+        skipped = self._apply_epoch(batch_df, epoch)
         # never advance the cursor past DDL a SKIPPED epoch did not apply
-        # (an intent replay of an already-committed epoch must not eat
-        # history files that arrived after the crash)
-        if use_hist and not res.get("skipped"):
-            self._hist.commit()
+        if hist is not None and not skipped:
+            hist.commit()
 
-    def _gate_tick(self, delivered: list[str]) -> None:
-        """Stage newly-delivered files, resolve any crash intent, apply
-        every applicable group in lsn order. Runs inside foreachBatch and
-        once at start() so a crash-parked intent or backlog drains even
-        when the stream has nothing new to deliver."""
-        self._gate.stage(delivered)
-        it = self._gate.intent()
+    def _gate_tick(self, stop: threading.Event) -> bool:
+        """One poll: list the changelog, resolve a crash-parked intent,
+        apply every applicable group in lsn order (stopping early at a
+        group boundary when the loop is stopped). True if anything
+        applied."""
+        gate = self._gate
+        gate.stage()
+        applied = False
+        it = gate.intent()
         if it is not None:
             ep, grp = it
             # idempotent: a group whose epoch already committed is skipped
@@ -514,93 +530,36 @@ class CdcTask(_TaskLifecycle):
             # the next fresh group instead (the engine tolerates DDL
             # arriving after its data via the bag/pending-widen paths)
             self._apply_files(grp, ep, with_history=False)
-            self._gate.done(ep, grp)
-        for ep, grp in self._gate.groups(
-            self.max_files_per_trigger,
-            # bounded drains form full-size epochs (wal.py groups()); the
-            # continuous tail favors latency and applies partials
-            hold_partial_tail=getattr(self, "_drain_mode", False),
-        ):
-            self._gate.begin(ep, grp)
+            gate.done(ep, grp)
+            applied = True
+        for ep, grp in gate.groups(self.max_files_per_trigger):
+            if stop.is_set():
+                break
+            gate.begin(ep, grp)
             self._apply_files(grp, ep)
-            self._gate.done(ep, grp)
+            gate.done(ep, grp)
+            applied = True
+        return applied
+
+    def _drained(self) -> bool:
+        return self._gate.pending() == 0
+
+    def _stall_reason(self) -> str:
+        blocker = self._gate.blocker() if self._gate is not None else None
+        return f": waiting on {blocker} (lsn range unreadable)" if blocker else ""
 
     # -- lifecycle (reference C1-C4, server/cdc_api.go:26-36) -------------
     def start(self, available_now: bool = False):
-        from milvus_cdc_spark.streaming.wal import delivered_files, local_path
-
-        self._drain_mode = available_now
         if self._gate is not None:
-            # drain any crash-parked intent/backlog before the stream runs
-            self._gate_tick([])
-
-        def _apply(batch_df, epoch_id: int):
-            if self._gate is not None:
-                files = delivered_files(self.checkpoint_dir, epoch_id)
-                if files is None:
-                    files = [local_path(u) for u in batch_df.inputFiles()]
-                    if not files and not batch_df.isEmpty():
-                        # data arrived but its file identity is unreadable
-                        # (checkpoint source log not locally accessible):
-                        # silently acking would strand the files as
-                        # undelivered blockers forever — refuse loudly
-                        raise RuntimeError(
-                            f"wal_order=True requires a locally readable "
-                            f"streaming checkpoint (no source log at "
-                            f"{self.checkpoint_dir}/sources/0/{epoch_id}) "
-                            "— move the checkpoint onto a shared POSIX "
-                            "path or pass wal_order=False for order-"
-                            "insensitive (patch-free) logs"
-                        )
-                self._gate_tick(files)
-                self._maybe_compact(self.table)
-                return
-            files = batch_df.inputFiles()
-            if files:  # ungated legacy path: re-root, apply as delivered
-                if self.source == "debezium":
-                    from milvus_cdc_spark.sources.debezium import _normalize
-
-                    batch_df = _normalize(self.spark.read.text(*files))
-                else:
-                    batch_df = self.spark.read.schema(
-                        batch_df.schema
-                    ).parquet(*files)
-            batch_df = _union_history(
-                self.spark, batch_df, self.history_path
-            )
-            apply_batch(
-                self.spark,
-                self.table,
-                batch_df,
-                epoch_id,
-                salt_partitions=self.salt_partitions,
-                on_malformed=self.on_malformed,
-                constraints=self.constraints,
-                on_violation=self.on_violation,
-            )
-            self._maybe_compact(self.table)
-
-        if self.source == "debezium":
-            from milvus_cdc_spark.sources.debezium import (
-                read_debezium_stream,
-            )
-
-            stream = read_debezium_stream(
-                self.spark, self.changelog_path, self.max_files_per_trigger
-            )
-        elif self.source == "kafka":
-            stream = _kafka_stream(
-                self.spark, self.changelog_path, self.kafka_options,
-                multi_table=False,
-            )
-        else:
-            stream = read_changelog_stream(
-                self.spark, self.changelog_path, self.max_files_per_trigger
-            )
+            return self._poll(self._gate_tick, available_now, _IDLE_TICK_SEC)
+        stream = _kafka_stream(
+            self.spark, self.changelog_path, self.kafka_options,
+            multi_table=self._multi,
+        )
         writer = (
-            stream.writeStream.foreachBatch(_apply)
+            stream.writeStream.foreachBatch(self._apply_epoch)
             .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(f"cdc:{os.path.basename(self.table.root)}")
+            .queryName(f"cdc:{self.checkpoint_dir}")
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
@@ -611,18 +570,57 @@ class CdcTask(_TaskLifecycle):
         return self.query
 
     def _status_extra(self) -> dict[str, Any]:
+        if self._gate is None:
+            return {}
+        # listed files the gate is still holding (0 on a drained log)
+        return {"wal_pending_files": self._gate.pending()}
+
+
+class CdcTask(_FileTask):
+    """One replication task: changelog path → SnapshotTable."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        changelog_path: str,
+        table_root: str,
+        checkpoint_dir: str,
+        **kw,
+    ):
+        self.table = SnapshotTable(table_root)
+        super().__init__(spark, changelog_path, checkpoint_dir, **kw)
+        if not self.table.exists():
+            self.table.create(
+                TRANSCRIPTS_BASE_COLUMNS, n_buckets=self.n_buckets,
+                write_mode=self.write_mode,
+            )
+
+    def _table_roots(self) -> list[str]:
+        return [self.table.root]
+
+    def _apply_epoch(self, batch_df, epoch: int) -> bool:
+        res = apply_batch(
+            self.spark,
+            self.table,
+            batch_df,
+            epoch,
+            salt_partitions=self.salt_partitions,
+            on_malformed=self.on_malformed,
+            constraints=self.constraints,
+            on_violation=self.on_violation,
+        )
+        self._maybe_compact(self.table)
+        return bool(res.get("skipped"))
+
+    def _status_extra(self) -> dict[str, Any]:
         m = self.table.current()
-        out = {
+        return {
             "snapshot_id": m.snapshot_id,
             "table_version": m.version,
             "epochs_committed": len(m.epochs),
             "summary": m.summary,
+            **super()._status_extra(),
         }
-        if self._gate is not None:
-            # files the stream delivered that the WAL gate is still
-            # holding for an earlier-lsn file (0 on a drained log)
-            out["wal_pending_files"] = self._gate.pending()
-        return out
 
 
 class CollectionFilter:
@@ -661,7 +659,7 @@ class CollectionFilter:
         return any(i == ns or i.startswith(ns + ".") for i in self.includes)
 
     def predicate(self):
-        """Spark Column form — pushed into the micro-batch scan so
+        """Spark Column form — pushed into the epoch's scan so
         excluded collections' events are pruned before any shuffle.
         Namespace-level ops ride through (they're matched on the bare
         namespace name and re-checked driver-side)."""
@@ -698,9 +696,9 @@ class CollectionFilter:
         )
 
 
-class MultiCdcTask(_TaskLifecycle):
+class MultiCdcTask(_FileTask):
     """One replication task over a MULTIPLEXED changelog: N collections'
-    events ride one ordered log (``table_name`` column); each micro-batch
+    events ride one ordered log (``table_name`` column); each epoch's batch
     is split per collection and MERGEd into that collection's own
     SnapshotTable under ``tables_root/<name>`` (``tables_root/<ns>/<table>``
     for namespaced collections).
@@ -731,6 +729,7 @@ class MultiCdcTask(_TaskLifecycle):
     """
 
     NS_MARKER = "_namespace.json"
+    _multi = True
 
     def __init__(
         self,
@@ -741,80 +740,19 @@ class MultiCdcTask(_TaskLifecycle):
         *,
         collections: list[str] | None = None,
         excludes: list[str] | tuple = (),
-        max_files_per_trigger: int | None = 4,
-        salt_partitions: int | None = None,
-        n_buckets: int = 16,
         max_concurrency: int = 8,
-        write_mode: str = "cow",
-        auto_compact_files: int | None = None,
-        on_malformed: str = "fail",
-        constraints: list[str] | None = None,
-        on_violation: str = "fail",
-        source: str = "parquet",
-        history_path: str | None = None,
-        wal_order: bool = True,
-        kafka_options: dict | None = None,
+        **kw,
     ):
-        if source not in ("parquet", "debezium", "kafka"):
-            raise ValueError(
-                "source must be 'parquet', 'debezium', or 'kafka', got "
-                f"{source!r}"
-            )
-        if history_path and source != "debezium":
-            raise ValueError(
-                "history_path only applies to source='debezium' (the "
-                "native parquet/kafka changelogs carry DDL inline)"
-            )
-        if source == "kafka":
-            if not (kafka_options or {}).get("bootstrap_servers"):
-                raise ValueError(
-                    "source='kafka' requires kafka_options with "
-                    "'bootstrap_servers' (topic defaults to changelog_path)"
-                )
-        elif kafka_options:
-            raise ValueError("kafka_options only applies to source='kafka'")
-        self.spark = spark
-        self.changelog_path = changelog_path
-        self.on_malformed = on_malformed
-        self.constraints = list(constraints or [])
-        self.on_violation = on_violation
-        self.source = source
-        self.kafka_options = dict(kafka_options or {})
-        # schema-change topic dir (see CdcTask) — decoded multi_table so
-        # each event routes to its collection
-        self.history_path = history_path
         self.tables_root = tables_root
         self.filter = CollectionFilter(collections, excludes)
-        self.max_files_per_trigger = max_files_per_trigger
-        self.salt_partitions = salt_partitions
-        self.n_buckets = n_buckets
-        self.write_mode = write_mode
-        self.auto_compact_files = auto_compact_files
         self.max_concurrency = max_concurrency
         self.tables: dict[str, SnapshotTable] = {}
-        self._init_lifecycle(checkpoint_dir)
-        self.wal_order = wal_order and source != "kafka"
-        self._gate = None
-        if self.wal_order:  # see CdcTask: lsn-ordered batch formation
-            from milvus_cdc_spark.streaming.wal import WalGate
+        super().__init__(spark, changelog_path, checkpoint_dir, **kw)
 
-            self._gate = WalGate(
-                changelog_path,
-                os.path.join(checkpoint_dir, "wal_ledger.json"),
-                order="lsn" if source == "parquet" else "name",
-                range_fn=(
-                    self._lsn_range_fn if source == "parquet" else None
-                ),
-            )
-            self._gate.bootstrap_from_checkpoint(checkpoint_dir)
-        self._hist = None
-        if self.history_path and self._gate is not None:
-            from milvus_cdc_spark.sources.debezium import HistoryCursor
+    def _table_roots(self) -> list[str]:
+        from milvus_cdc_spark.streaming.registry import _walk_tables
 
-            self._hist = HistoryCursor(
-                self.history_path,
-                os.path.join(checkpoint_dir, "history_cursor.json"),
-            )
+        return [root for _name, root in _walk_tables(self.tables_root)]
 
     # -- naming / namespaces ----------------------------------------------
     def _table_path(self, name: str) -> str:
@@ -916,10 +854,13 @@ class MultiCdcTask(_TaskLifecycle):
         )
 
     # -- the per-batch fanout ----------------------------------------------
-    def apply_multi(self, batch_df, epoch_id: int) -> None:
+    def apply_multi(self, batch_df, epoch_id: int) -> bool:
         """Split one multiplexed batch per collection and MERGE each slice
         concurrently. Public so batch-style callers (probes, backfills)
-        can drive the same fanout the stream uses."""
+        can drive the same fanout the task uses. Returns whether the epoch
+        was skipped as already committed on any table it touched — the
+        signal that holds back the history cursor, whose DDL must reach
+        every table of the epoch."""
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark.sql import functions as F
@@ -1022,9 +963,8 @@ class MultiCdcTask(_TaskLifecycle):
             return res
 
         if len(ordered) <= 1:
-            for name in ordered:
-                one(name)
-            return
+            return any(one(name).get("skipped") for name in ordered)
+        results = []
         with ThreadPoolExecutor(
             max_workers=min(self.max_concurrency, len(ordered))
         ) as ex:
@@ -1032,141 +972,21 @@ class MultiCdcTask(_TaskLifecycle):
             errors = []
             for n, fut in futures:
                 try:
-                    fut.result()
+                    results.append(fut.result())
                 except Exception as e:  # collect, let siblings finish
                     errors.append((n, e))
             if errors:
-                # fail the batch → streaming retry; per-table epoch gates
+                # fail the epoch → the task's retry; per-table epoch gates
                 # skip the tables that already committed
                 name, err = errors[0]
                 raise RuntimeError(
                     f"epoch {epoch_id}: {len(errors)} collection(s) failed, "
                     f"first = {name}"
                 ) from err
+        return any(r.get("skipped") for r in results)
 
-    _lsn_range_fn = CdcTask._lsn_range_fn
-
-    def _apply_files(
-        self, files: list[str], epoch: int, with_history: bool = True
-    ) -> None:
-        """One file-group → one apply_multi epoch (plain-reader re-root,
-        see CdcTask._apply_files)."""
-        if self.source == "debezium":
-            from milvus_cdc_spark.sources.debezium import _normalize
-
-            batch_df = _normalize(
-                self.spark.read.text(*files), multi_table=True
-            )
-        else:
-            from milvus_cdc_spark.schemas import MULTI_CHANGELOG_SCHEMA
-
-            batch_df = self.spark.read.schema(
-                MULTI_CHANGELOG_SCHEMA
-            ).parquet(*files)
-        use_hist = self._hist is not None and with_history
-        if use_hist:  # cursored decode, see CdcTask
-            ev = self._hist.events(self.spark, multi_table=True)
-            if ev is not None:
-                batch_df = batch_df.unionByName(ev)
-        self.apply_multi(batch_df, epoch)
-        if use_hist:
-            self._hist.commit()
-
-    def _gate_tick(self, delivered: list[str]) -> None:
-        """Identical protocol to CdcTask._gate_tick; apply_multi is
-        idempotent per (table, epoch), which is what makes the intent
-        replay safe. History stays out of intent replays (a skipped
-        per-table epoch must not eat post-crash topic files)."""
-        self._gate.stage(delivered)
-        it = self._gate.intent()
-        if it is not None:
-            ep, grp = it
-            self._apply_files(grp, ep, with_history=False)
-            self._gate.done(ep, grp)
-        for ep, grp in self._gate.groups(
-            self.max_files_per_trigger,
-            # bounded drains form full-size epochs (wal.py groups()); the
-            # continuous tail favors latency and applies partials
-            hold_partial_tail=getattr(self, "_drain_mode", False),
-        ):
-            self._gate.begin(ep, grp)
-            self._apply_files(grp, ep)
-            self._gate.done(ep, grp)
-
-    def start(self, available_now: bool = False):
-        from milvus_cdc_spark.streaming.wal import delivered_files, local_path
-
-        self._drain_mode = available_now
-        if self._gate is not None:
-            self._gate_tick([])
-
-        def _apply(batch_df, epoch_id: int):
-            if self._gate is not None:
-                files = delivered_files(self.checkpoint_dir, epoch_id)
-                if files is None:
-                    files = [local_path(u) for u in batch_df.inputFiles()]
-                    if not files and not batch_df.isEmpty():
-                        raise RuntimeError(  # see CdcTask: refuse loudly
-                            f"wal_order=True requires a locally readable "
-                            f"streaming checkpoint (no source log at "
-                            f"{self.checkpoint_dir}/sources/0/{epoch_id})"
-                            " — or pass wal_order=False for patch-free "
-                            "logs"
-                        )
-                self._gate_tick(files)
-                return
-            files = batch_df.inputFiles()
-            if files:  # same plain-reader re-root as CdcTask.start
-                if self.source == "debezium":
-                    from milvus_cdc_spark.sources.debezium import _normalize
-
-                    batch_df = _normalize(
-                        self.spark.read.text(*files), multi_table=True
-                    )
-                else:
-                    batch_df = self.spark.read.schema(
-                        batch_df.schema
-                    ).parquet(*files)
-            batch_df = _union_history(
-                self.spark, batch_df, self.history_path, multi_table=True
-            )
-            self.apply_multi(batch_df, epoch_id)
-
-        if self.source == "debezium":
-            from milvus_cdc_spark.sources.debezium import (
-                read_debezium_stream,
-            )
-
-            stream = read_debezium_stream(
-                self.spark,
-                self.changelog_path,
-                self.max_files_per_trigger,
-                multi_table=True,
-            )
-        elif self.source == "kafka":
-            stream = _kafka_stream(
-                self.spark, self.changelog_path, self.kafka_options,
-                multi_table=True,
-            )
-        else:
-            stream = read_changelog_stream(
-                self.spark,
-                self.changelog_path,
-                self.max_files_per_trigger,
-                multi_table=True,
-            )
-        writer = (
-            stream.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(f"cdc-multi:{os.path.basename(self.tables_root)}")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(processingTime="1 second")
-        self.query = writer.start()
-        self._write_status("Running")
-        return self.query
+    def _apply_epoch(self, batch_df, epoch: int) -> bool:
+        return self.apply_multi(batch_df, epoch)
 
     def _status_extra(self) -> dict[str, Any]:
         out: dict[str, Any] = {"tables": {}}
@@ -1177,20 +997,20 @@ class MultiCdcTask(_TaskLifecycle):
                 "table_version": m.version,
                 "epochs_committed": len(m.epochs),
             }
-        return out
+        return {**out, **super()._status_extra()}
 
 
 class _LoopQuery:
     """Duck-typed StreamingQuery over a driver-side poll loop.
 
-    ``CascadeTask``'s source is another SnapshotTable's manifest, not a
-    Spark streaming source, so there is no real StreamingQuery to manage —
-    this shim runs the poll loop on a thread and exposes the three members
+    File tasks and the table-tailing tasks have no Spark streaming source,
+    so there is no real StreamingQuery to manage — this shim runs the poll
+    loop (``_TaskLifecycle._poll``) on a thread and exposes the members
     ``_TaskLifecycle`` actually uses (``awaitTermination``/``stop``/
-    ``isActive``), so the ENTIRE task surface (drain_protected's
-    fail-protect + cross-process pause polling, tail's duration loop,
-    pause/resume, persisted status) works on a cascade unchanged. A loop
-    exception surfaces from ``awaitTermination`` exactly like a
+    ``isActive``/``exception``), so the ENTIRE task surface
+    (drain_protected's fail-protect + cross-process pause polling, tail's
+    duration loop, pause/resume, persisted status) works unchanged. A
+    loop exception surfaces from ``awaitTermination`` exactly like a
     StreamingQueryException would, which is what routes it into
     drain_protected's retry/trip path."""
 
@@ -1208,7 +1028,7 @@ class _LoopQuery:
                 self._done.set()
 
         self._thread = threading.Thread(
-            target=_run, name="cascade-loop", daemon=True
+            target=_run, name="task-loop", daemon=True
         )
 
     def start(self) -> "_LoopQuery":
@@ -1218,6 +1038,9 @@ class _LoopQuery:
     @property
     def isActive(self) -> bool:
         return not self._done.is_set()
+
+    def exception(self) -> BaseException | None:
+        return self._exc
 
     def awaitTermination(self, timeout: float | None = None) -> bool:
         finished = self._done.wait(timeout)
@@ -1286,29 +1109,24 @@ class CascadeTask(_TaskLifecycle):
         return max(eps) if eps else 0
 
     def start(self, available_now: bool = False):
+        return self._poll(self._tick, available_now, self.poll_sec)
+
+    def _tick(self, stop: threading.Event) -> bool:
         from milvus_cdc_spark.streaming.cascade import cascade_until_current
 
-        def _loop(stop_event):
-            while not stop_event.is_set():
-                from_v = self._position()
-                if self.src.current().version > from_v:
-                    cascade_until_current(
-                        self.spark,
-                        self.src,
-                        self.table,
-                        from_v,
-                        hop_versions=self.hop_versions,
-                        salt_partitions=self.salt_partitions,
-                    )
-                    self._maybe_compact(self.table)
-                elif available_now:
-                    return
-                else:
-                    stop_event.wait(self.poll_sec)
-
-        self.query = _LoopQuery(_loop).start()
-        self._write_status("Running")
-        return self.query
+        from_v = self._position()
+        if self.src.current().version <= from_v:
+            return False
+        cascade_until_current(
+            self.spark,
+            self.src,
+            self.table,
+            from_v,
+            hop_versions=self.hop_versions,
+            salt_partitions=self.salt_partitions,
+        )
+        self._maybe_compact(self.table)
+        return True
 
     def _status_extra(self) -> dict[str, Any]:
         m = self.table.current()
@@ -1368,20 +1186,15 @@ class ViewTask(_TaskLifecycle):
             return int(_json.load(f)["version"])
 
     def start(self, available_now: bool = False):
+        return self._poll(self._tick, available_now, self.poll_sec)
+
+    def _tick(self, stop: threading.Event) -> bool:
         from milvus_cdc_spark.operators.rollup import run_rollup_round
 
-        def _loop(stop_event):
-            while not stop_event.is_set():
-                if self.src.current().version > self._position():
-                    run_rollup_round(self.spark, self.src, self.view_store)
-                elif available_now:
-                    return
-                else:
-                    stop_event.wait(self.poll_sec)
-
-        self.query = _LoopQuery(_loop).start()
-        self._write_status("Running")
-        return self.query
+        if self.src.current().version <= self._position():
+            return False
+        run_rollup_round(self.spark, self.src, self.view_store)
+        return True
 
     def _status_extra(self) -> dict[str, Any]:
         src_v = self.src.current().version
@@ -1438,23 +1251,15 @@ class PublishTask(_TaskLifecycle):
             return int(_json.load(f)["version"])
 
     def start(self, available_now: bool = False):
+        return self._poll(self._tick, available_now, self.poll_sec)
+
+    def _tick(self, stop: threading.Event) -> bool:
         from milvus_cdc_spark.streaming.publish import publish_round
 
-        def _loop(stop_event):
-            while not stop_event.is_set():
-                if self.src.current().version > self._position():
-                    publish_round(
-                        self.spark, self.src, self.out_dir,
-                        n_files=self.n_files,
-                    )
-                elif available_now:
-                    return
-                else:
-                    stop_event.wait(self.poll_sec)
-
-        self.query = _LoopQuery(_loop).start()
-        self._write_status("Running")
-        return self.query
+        if self.src.current().version <= self._position():
+            return False
+        publish_round(self.spark, self.src, self.out_dir, n_files=self.n_files)
+        return True
 
     def _status_extra(self) -> dict[str, Any]:
         src_v = self.src.current().version
@@ -1550,37 +1355,27 @@ class MultiCascadeTask(_TaskLifecycle):
         self._maybe_compact(dst)
 
     def start(self, available_now: bool = False):
+        return self._poll(self._tick, available_now, self.poll_sec)
+
+    def _tick(self, stop: threading.Event) -> bool:
         from concurrent.futures import ThreadPoolExecutor
 
-        def _loop(stop_event):
-            while not stop_event.is_set():
-                behind = [
-                    (src, dst)
-                    for _name, src, dst in self._pairs()
-                    if not dst.exists()
-                    or src.current().version > self._position(dst)
-                ]
-                if behind:
-                    if len(behind) == 1:
-                        self._hop(*behind[0])
-                    else:
-                        with ThreadPoolExecutor(
-                            max_workers=min(self.max_concurrency, len(behind)),
-                            thread_name_prefix="cascade-hop",
-                        ) as pool:
-                            futs = [
-                                pool.submit(self._hop, s, d) for s, d in behind
-                            ]
-                            for f in futs:  # surface the FIRST failure
-                                f.result()
-                elif available_now:
-                    return
-                else:
-                    stop_event.wait(self.poll_sec)
-
-        self.query = _LoopQuery(_loop).start()
-        self._write_status("Running")
-        return self.query
+        behind = [
+            (src, dst)
+            for _name, src, dst in self._pairs()
+            if not dst.exists() or src.current().version > self._position(dst)
+        ]
+        if len(behind) == 1:
+            self._hop(*behind[0])
+        elif behind:
+            with ThreadPoolExecutor(
+                max_workers=min(self.max_concurrency, len(behind)),
+                thread_name_prefix="cascade-hop",
+            ) as pool:
+                futs = [pool.submit(self._hop, s, d) for s, d in behind]
+                for f in futs:  # surface the FIRST failure
+                    f.result()
+        return bool(behind)
 
     def _status_extra(self) -> dict[str, Any]:
         tables: dict[str, Any] = {}
@@ -1605,11 +1400,11 @@ def run_until_drained(
     checkpoint_dir: str,
     **kw,
 ) -> CdcTask:
-    """Batch-drain mode: process everything currently in the log, then stop.
+    """Batch-drain mode: apply every file currently in the log, then stop.
 
-    availableNow still honors maxFilesPerTrigger, so the run is a sequence
-    of bounded micro-batches with per-epoch commits — identical semantics
-    to the continuous trigger, minus the idle polling.
+    The run still honors ``max_files_per_trigger``, so it is a sequence of
+    bounded epochs — identical semantics to the continuous task, minus
+    the idle polling.
     """
     task = CdcTask(spark, changelog_path, table_root, checkpoint_dir, **kw)
     task.start(available_now=True)

@@ -11,7 +11,8 @@ pause/resume/delete/list tasks it didn't start:
   the running task — see engine.CdcTask._write_status)
 - ``<checkpoint>/PAUSE_REQUESTED``   pause signal: the process running the
   task polls for it at batch boundaries and stops gracefully; resume
-  removes it and restarts from the streaming checkpoint.
+  removes it and restarts from the checkpoint (the WAL ledger of a file
+  task, the streaming checkpoint of a Kafka task).
 """
 
 from __future__ import annotations
@@ -262,8 +263,10 @@ class TaskRegistry:
     def position(self, spec_or_name) -> dict[str, Any]:
         """Source-offset → sink-snapshot position report (the reference's
         ``getPosition`` verb, server/cdc_api.go:26-36: task positions =
-        consumed MQ offsets per channel). No Spark session: reads the
-        streaming checkpoint's commit/offset log, the table manifest(s),
+        consumed MQ offsets per channel). No Spark session: reads a file
+        task's WAL ledger (``last_epoch``/``applied_hwm``/
+        ``pending_files``) or a Kafka task's streaming commit/offset log,
+        the table manifest(s),
         the per-partition lineage parquet, and the newest epoch's
         ``lag_sec`` gauge (reference replicate_tt lag,
         server/metrics/metrics.go:107-137) directly.
@@ -299,7 +302,17 @@ class TaskRegistry:
             if os.path.isdir(commits_dir)
             else []
         )
-        if batches:
+        if spec.get("log") and spec.get("source") != "kafka":
+            # file tasks: the WAL ledger is the source position
+            from milvus_cdc_spark.streaming.wal import WalGate
+
+            out.update(
+                WalGate(
+                    spec["log"],
+                    os.path.join(spec["checkpoint"], "wal_ledger.json"),
+                ).position()
+            )
+        elif batches:  # kafka: Spark's commit/offset log
             last = max(batches)
             out["last_committed_batch"] = last
             # offsets/<batch>: line 1 = version, line 2 = batch metadata,

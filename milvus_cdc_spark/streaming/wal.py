@@ -1,14 +1,14 @@
-"""WAL-regime batch formation: apply changelog files in lsn order.
+"""The changelog source of parquet and Debezium file tasks: apply
+changelog files in lsn order.
 
-Why this exists: Spark's file-stream source forms micro-batches in file
-*modification-time* order, but the changelog is a WAL — its files are
-lsn-ranged, and OP_PATCH (read-modify-write, schemas.OP_PATCH) is only
-correct when every event's anchor state is final before the patch
-applies. The changelog writer emits its lsn-ranged files from parallel
-tasks, so their mtimes are effectively random: without this gate the
-same patch log drained at different ``maxFilesPerTrigger`` values
-commits epochs over *disjoint, out-of-order* lsn ranges and converges to
-different (wrong) final states. INSERT/UPSERT/DELETE are order-
+Why this exists: the changelog is a WAL — its files are lsn-ranged, and
+OP_PATCH (read-modify-write, schemas.OP_PATCH) is only correct when every
+event's anchor state is final before the patch applies. The changelog
+writer emits its lsn-ranged files from parallel tasks, so their arrival
+order and mtimes are effectively random: batching files as they appear
+commits epochs over *disjoint, out-of-order* lsn ranges, and the same
+patch log drained at different ``max_files_per_trigger`` values converges
+to different (wrong) final states. INSERT/UPSERT/DELETE are order-
 insensitive across batches (the (ts, rank, lsn) lattice in
 operators/apply.py), so only batch *formation* needs fixing — in-batch
 composition is already total-order correct.
@@ -16,40 +16,41 @@ composition is already total-order correct.
 This is the Spark analogue of the reference's per-channel ordered apply
 (/root/reference/core/writer/replicate_message_manager.go:84-109: one
 goroutine per channel draining packs strictly in seek order): the
-channel's ordering contract moves into a driver-side gate over the file
+channel's ordering contract lives in one driver-side gate over the file
 queue, and everything downstream stays the same declarative plan.
 
-Mechanism — a persistent ledger next to the streaming checkpoint:
+Mechanism — a persistent ledger (``<checkpoint>/wal_ledger.json``) that
+the task's poll loop (streaming/engine.py) drives once per tick:
 
-- **stage**: every file the stream delivers is recorded with its
-  (min_lsn, max_lsn) range, read driver-side from the parquet footer
-  statistics (pyarrow; one tiny metadata read per file, cached forever).
-- **order**: candidate files are *everything currently in the changelog
-  directory* (the same listing the stream source itself performs),
-  sorted by (min_lsn, max_lsn, name). A candidate the stream has not
-  delivered yet BLOCKS every file above it — so an adversarially-mtimed
-  delivery order just shifts work to later triggers, it can never
-  reorder it.
-- **apply**: the maximal applicable prefix is cut into contiguous groups
+- **stage**: list the changelog directory. Every data file present is a
+  candidate (Spark's file-source visibility rule: no path component
+  starting with ``.`` or ``_``), recorded with its (min_lsn, max_lsn)
+  range read driver-side from the parquet footer statistics (pyarrow; one
+  tiny metadata read per new file, cached in the ledger).
+- **order**: candidates sort by (min_lsn, max_lsn, path). A candidate
+  whose range cannot be read yet (mid-write) BLOCKS every file above it,
+  so files landing in any order just shift work to later ticks — they can
+  never reorder it.
+- **apply**: the applicable prefix is cut into contiguous groups
   (≤ max_files_per_trigger files, extended over lsn-range overlaps) and
-  each group applies as ONE apply_batch epoch. With in-order mtimes each
-  trigger applies exactly its own files — identical behavior to the
-  ungated engine on well-behaved logs.
+  each group applies as ONE apply_batch epoch.
 - **crash safety**: a write-ahead *intent* (epoch, file-group) is
   persisted before the apply; on replay, an intent whose epoch the
-  manifest already committed is marked done (the commit won the race),
-  otherwise the exact same group re-applies under the exact same epoch
-  and the manifest's idempotence gate does the rest.
+  manifest already committed is skipped by the manifest's idempotence
+  gate, otherwise the exact same group re-applies under the exact same
+  epoch.
 
 Append-order violations (a file appearing with lsns below the applied
-high-watermark — a producer rewriting history) and the disappearance of
-a delivered-but-unapplied file refuse loudly rather than converge to a
-silent wrong state.
+high-watermark — a producer rewriting history; DLQ replay files are the
+one sanctioned exception) and the disappearance of a listed-but-unapplied
+file refuse loudly rather than converge to a silent wrong state.
 
-At scale: the ledger is O(#files-in-retention) driver-side JSON; footer
-reads are one metadata RPC per new file (object stores included) and are
-cached; entries for files that retention has deleted are pruned once
-applied. No Spark job runs unless a group actually applies.
+Listing and ledger I/O go through ``plans/fs.get_fs``, so a root no
+TableFS serves refuses when the gate is built instead of degrading.
+Footer reads are one metadata read per new file; entries for applied
+files that retention has deleted are pruned (the high-watermark keeps
+the violation check alive without them). No Spark job runs unless a
+group actually applies.
 """
 
 from __future__ import annotations
@@ -57,46 +58,15 @@ from __future__ import annotations
 import json
 import os
 from typing import Any, Callable
-from urllib.parse import unquote, urlparse
+
+from milvus_cdc_spark.plans.fs import get_fs
 
 LsnRange = tuple[int, int]
 
-
-def local_path(uri: str) -> str:
-    """``DataFrame.inputFiles()`` URIs (file:/...) → plain paths."""
-    p = urlparse(uri)
-    if p.scheme in ("", "file"):
-        return unquote(p.path)
-    return uri  # non-local fs: keep the URI as the ledger key
-
-
-def delivered_files(checkpoint_dir: str, batch_id: int) -> list[str] | None:
-    """The exact file list the FileStreamSource put into this micro-batch,
-    from the streaming checkpoint's source log (``sources/0/<batchId>``,
-    one JSON entry per file) — written by the source when it PLANS the
-    batch, i.e. before foreachBatch runs. This is the batch's durable,
-    replay-stable identity; ``DataFrame.inputFiles()`` on the micro-batch
-    relation is empty on current Spark, so the log is the primary source."""
-    base = os.path.join(checkpoint_dir, "sources", "0", str(int(batch_id)))
-    # every compactInterval-th batch is written as `<id>.compact`,
-    # embedding ALL prior entries tagged with their original batchId —
-    # filter to this batch's own files
-    p, compacted = base, False
-    if not os.path.exists(p):
-        p, compacted = base + ".compact", True
-        if not os.path.exists(p):
-            return None
-    out = []
-    with open(p) as f:
-        for line in f:
-            line = line.strip()
-            if not line.startswith("{"):
-                continue  # version header
-            e = json.loads(line)
-            if compacted and int(e.get("batchId", -1)) != int(batch_id):
-                continue
-            out.append(local_path(e["path"]))
-    return out
+# log files the DLQ reprocess loop writes (plans/manifest.py::
+# dlq_replay_dir): they re-inject quarantined rows at their ORIGINAL lsns
+# by design, so they are exempt from the append-order check
+DLQ_REPLAY_PREFIX = "dlq-replay-"
 
 
 def parquet_lsn_range(path: str, col: str = "lsn") -> LsnRange | None:
@@ -130,8 +100,11 @@ def parquet_lsn_range(path: str, col: str = "lsn") -> LsnRange | None:
 
 
 class WalGate:
-    """Per-task ordered-apply ledger. Not thread-safe by design: exactly
-    one foreachBatch invocation is in flight per streaming query."""
+    """Per-task ordered-apply ledger over the changelog directory. Not
+    thread-safe by design: one poll-loop thread drives it.
+
+    ``order='name'`` (Debezium topic dumps: no parquet footers, files
+    named in topic order) sorts by file name and reads no ranges."""
 
     def __init__(
         self,
@@ -146,15 +119,24 @@ class WalGate:
         self.changelog_path = changelog_path
         self.ledger_path = ledger_path
         self.order = order
-        self.range_fn = range_fn or parquet_lsn_range
+        self.range_fn = range_fn
+        # both raise for a root no TableFS implementation serves
+        self._fs = get_fs(changelog_path)
+        self._ledger_fs = get_fs(ledger_path)
         self._state: dict[str, Any] | None = None
+        self._listing: list[str] = []  # the last stage()'s candidates
+        self._dirty = False
 
     # -- ledger persistence ------------------------------------------------
+    def has_ledger(self) -> bool:
+        return self._ledger_fs.exists(self.ledger_path)
+
     def _load(self) -> dict[str, Any]:
         if self._state is None:
-            if os.path.exists(self.ledger_path):
-                with open(self.ledger_path) as f:
-                    self._state = json.loads(f.read())
+            if self.has_ledger():
+                self._state = json.loads(
+                    self._ledger_fs.read_text(self.ledger_path)
+                )
             else:
                 self._state = {
                     "v": 1,
@@ -166,29 +148,19 @@ class WalGate:
         return self._state
 
     def _save(self) -> None:
-        os.makedirs(os.path.dirname(self.ledger_path), exist_ok=True)
-        tmp = self.ledger_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(json.dumps(self._state))
-        os.replace(tmp, self.ledger_path)
+        self._ledger_fs.makedirs(os.path.dirname(self.ledger_path))
+        self._ledger_fs.write_text_atomic(
+            self.ledger_path, json.dumps(self._state)
+        )
+        self._dirty = False
 
     # -- candidate discovery ----------------------------------------------
-    def _list_dir(self) -> list[str] | None:
-        """Data-file candidates currently in the changelog dir — the same
-        visibility rule the file-stream source uses (hidden/underscore
-        names skipped). ``None`` = the path isn't locally listable (e.g.
-        an object-store URI): the gate degrades to ordering over the
-        delivered set only (no not-yet-delivered blockers)."""
-        if os.path.isfile(self.changelog_path):
-            return [self.changelog_path]
-        if not os.path.isdir(self.changelog_path):
-            return None
+    def _list(self) -> list[str]:
+        root = self.changelog_path
         out = []
-        for name in os.listdir(self.changelog_path):
-            if name.startswith((".", "_")):
-                continue
-            p = os.path.join(self.changelog_path, name)
-            if os.path.isfile(p):
+        for p, _mtime, _size in self._fs.walk_files(root):
+            rel = os.path.relpath(p, root)
+            if not any(s.startswith((".", "_")) for s in rel.split(os.sep)):
                 out.append(p)
         return out
 
@@ -196,79 +168,50 @@ class WalGate:
         files = self._load()["files"]
         e = files.get(path)
         if e is None:
-            e = files[path] = {
-                "min": None,
-                "max": None,
-                "delivered": False,
-                "applied": False,
-            }
+            e = files[path] = {"min": None, "max": None, "applied": False}
+            self._dirty = True
         if self.order == "lsn" and e["min"] is None and not e["applied"]:
-            rng = self.range_fn(path)
+            rng = (self.range_fn or parquet_lsn_range)(path)
             if rng is not None:
                 e["min"], e["max"] = rng
+                self._dirty = True
         return e
 
     # -- public surface ----------------------------------------------------
-    def stage(self, delivered: list[str]) -> None:
+    def stage(self) -> None:
+        """List the changelog directory: this tick's candidate set. Reads
+        the range of every new (or still unreadable) file and refuses
+        history rewrites and vanished files."""
         st = self._load()
-        for p in delivered:
+        listing = self._list()
+        present = set(listing)
+        for p, e in st["files"].items():
+            if not e["applied"] and p not in present:
+                raise ValueError(
+                    f"WAL file vanished before apply: {p} — changelog "
+                    "retention deleted a listed file the gate had not yet "
+                    "applied"
+                )
+        hwm = st["applied_hwm"]
+        for p in listing:
             e = self._entry(p)
-            e["delivered"] = True
             if (
                 self.order == "lsn"
+                and not e["applied"]
                 and e["min"] is not None
                 and e["min"] <= e["max"]  # zero-row files carry no lsns
-                and st["applied_hwm"] is not None
-                and e["min"] <= st["applied_hwm"]
-                and not e["applied"]
+                and hwm is not None
+                and e["min"] <= hwm
+                and not os.path.basename(p).startswith(DLQ_REPLAY_PREFIX)
             ):
                 raise ValueError(
                     f"WAL append-order violation: {p} carries lsn range "
                     f"[{e['min']}, {e['max']}] at/below the applied "
-                    f"high-watermark {st['applied_hwm']} — the changelog "
-                    "producer rewrote history. Pass wal_order=False only "
-                    "for order-insensitive (patch-free) logs."
+                    f"high-watermark {hwm} — the changelog producer "
+                    "rewrote history"
                 )
-        self._save()
-
-    def bootstrap_from_checkpoint(self, checkpoint_dir: str) -> None:
-        """One-time upgrade path: a streaming checkpoint with committed
-        batches but NO ledger predates the gate. Without this, the old
-        (already-applied) changelog files would block every new file as
-        'undelivered', and once retention removed them the fresh epoch
-        counter (0, 1, …) would collide with manifest epochs committed
-        under Spark batch ids — apply_batch would skip and the gate would
-        mark new files applied with their data never landing. The source
-        log itself records every historically-delivered file, so: mark
-        them delivered+applied (the ungated engine applied every batch on
-        delivery) and continue epoch numbering past the last Spark batch
-        id."""
-        if os.path.exists(self.ledger_path):
-            return
-        src = os.path.join(checkpoint_dir, "sources", "0")
-        if not os.path.isdir(src):
-            return  # fresh checkpoint: nothing to inherit
-        st = self._load()
-        max_batch = -1
-        for fn in os.listdir(src):
-            base = fn[:-8] if fn.endswith(".compact") else fn
-            if not base.isdigit():
-                continue
-            max_batch = max(max_batch, int(base))
-            with open(os.path.join(src, fn)) as f:
-                for line in f:
-                    line = line.strip()
-                    if not line.startswith("{"):
-                        continue
-                    p = local_path(json.loads(line)["path"])
-                    st["files"][p] = {
-                        "min": None,
-                        "max": None,
-                        "delivered": True,
-                        "applied": True,
-                    }
-        if max_batch >= 0:
-            st["next_epoch"] = max_batch + 1
+        self._listing = listing
+        if self._dirty:
             self._save()
 
     def intent(self) -> tuple[int, list[str]] | None:
@@ -287,107 +230,39 @@ class WalGate:
         mx = e["max"] if e["max"] is not None else (1 << 62)
         return (mn, mx, path)
 
-    def groups(
-        self, max_files: int | None, hold_partial_tail: bool = False
-    ) -> list[tuple[int, list[str]]]:
-        """Ordered applicable (epoch, file-group) list for this trigger.
-        Reserves the epoch numbers; caller must begin/done each group in
-        order.
-
-        ``hold_partial_tail``: when undelivered candidates remain, a
-        trailing group smaller than ``max_files`` is held for the next
-        trigger instead of committing a small epoch — the undelivered
-        files GUARANTEE another trigger is coming, so a bounded drain
-        forms the same full-size epochs an in-order delivery would
-        (without it, a scattered first trigger's short applicable prefix
-        costs an extra epoch — measured ~6% on the CoW headline). Leave
-        it off for latency-sensitive continuous tails."""
+    def groups(self, max_files: int | None) -> list[tuple[int, list[str]]]:
+        """Ordered applicable (epoch, file-group) list over the last
+        stage()'s candidates. Numbers the epochs from the ledger; the
+        caller must begin/done each group in order."""
         st = self._load()
-        listing = self._list_dir()
-        if listing is None:  # non-listable root: delivered set only
-            candidates = [
-                p for p, e in st["files"].items() if not e["applied"]
-            ]
-        else:
-            candidates = listing
-            # a delivered-but-unapplied file vanishing from the dir is
-            # data loss (retention raced the consumer): refuse loudly
-            present = set(candidates)
-            for p, e in st["files"].items():
-                if e["delivered"] and not e["applied"] and p not in present:
-                    raise ValueError(
-                        f"WAL file vanished before apply: {p} — changelog "
-                        "retention deleted a file the stream had delivered "
-                        "but the gate had not yet applied"
-                    )
-        for p in candidates:
-            self._entry(p)  # ensure ranges are known/attempted
-        ordered = sorted(candidates, key=self._sort_key)
-        # blocking watermark: no file may apply at-or-above the lowest lsn
-        # an undelivered (or unknown-range) candidate could contain —
-        # protects OVERLAPPING ranges too: if delivered A=[1,5] coexists
-        # with undelivered B=[2,6], A must wait (applying A then staging B
-        # would be a false append-order violation)
-        blocked_min = None
-        if self.order == "lsn":
-            for p in ordered:
-                e = st["files"][p]
-                if e["applied"]:
-                    continue  # an applied file never blocks
-                if not e["delivered"] or e["min"] is None:
-                    lo = e["min"] if e["min"] is not None else -(1 << 62)
-                    blocked_min = lo if blocked_min is None else min(
-                        blocked_min, lo
-                    )
+        files = st["files"]
         applicable: list[str] = []
-        for p in ordered:
-            e = st["files"][p]
-            if e["applied"]:
-                continue  # incl. checkpoint-bootstrap entries (range unknown)
-            if not e["delivered"] or (self.order == "lsn" and e["min"] is None):
-                break  # undelivered/unreadable candidate blocks all above
-            if (
-                self.order == "lsn"
-                and blocked_min is not None
-                and e["max"] is not None
-                and e["max"] >= blocked_min
-            ):
-                break  # overlaps a not-yet-deliverable range
+        for p in sorted(
+            (p for p in self._listing if not files[p]["applied"]),
+            key=self._sort_key,
+        ):
+            if self.order == "lsn" and files[p]["min"] is None:
+                break  # unreadable range: blocks every file above it
             applicable.append(p)
-        if not applicable:
-            self._save()  # persist any newly-cached ranges
-            return []
         out: list[tuple[int, list[str]]] = []
         cap = max_files or len(applicable)
         group: list[str] = []
         group_max = None
         for p in applicable:
-            e = st["files"][p]
+            e = files[p]
             overlap = (
                 self.order == "lsn"
                 and group_max is not None
-                and e["min"] is not None
                 and e["min"] <= group_max
             )
             if group and len(group) >= cap and not overlap:
                 out.append((st["next_epoch"] + len(out), group))
                 group, group_max = [], None
             group.append(p)
-            if self.order == "lsn" and e["max"] is not None:
+            if self.order == "lsn":
                 group_max = e["max"] if group_max is None else max(group_max, e["max"])
-        undelivered_remain = any(
-            not e["delivered"]
-            for e in st["files"].values()
-            if not e["applied"]
-        )
-        if not (
-            hold_partial_tail
-            and undelivered_remain
-            and max_files
-            and len(group) < max_files
-        ):
+        if group:
             out.append((st["next_epoch"] + len(out), group))
-        self._save()
         return out
 
     def begin(self, epoch: int, files: list[str]) -> None:
@@ -401,29 +276,46 @@ class WalGate:
             e = st["files"].get(p)
             if e is not None:
                 e["applied"] = True
-                e["delivered"] = True
                 if self.order == "lsn" and e["max"] is not None:
                     if st["applied_hwm"] is None or e["max"] > st["applied_hwm"]:
                         st["applied_hwm"] = e["max"]
         st["intent"] = None
         st["next_epoch"] = max(st["next_epoch"], int(epoch) + 1)
         # prune: applied entries for files retention has already deleted
-        # (the hwm keeps the violation check alive without them)
-        listing = self._list_dir()
-        if listing is not None:
-            present = set(listing)
-            st["files"] = {
-                p: e
-                for p, e in st["files"].items()
-                if p in present or not e["applied"]
-            }
+        present = set(self._listing)
+        st["files"] = {
+            p: e
+            for p, e in st["files"].items()
+            if p in present or not e["applied"]
+        }
         self._save()
 
     def pending(self) -> int:
-        """Delivered-but-not-yet-applied file count (status surface)."""
+        """Listed-but-not-yet-applied file count (status surface)."""
+        entries = list(self._load()["files"].values())
+        return sum(1 for e in entries if not e["applied"])
+
+    def blocker(self) -> str | None:
+        """The lowest listed unapplied file whose lsn range cannot be read
+        — what an lsn-ordered drain is waiting on — or None."""
+        if self.order != "lsn":
+            return None
+        files = self._load()["files"]
+        stuck = [
+            p
+            for p in list(self._listing)
+            if p in files
+            and not files[p]["applied"]
+            and files[p]["min"] is None
+        ]
+        return min(stuck) if stuck else None
+
+    def position(self) -> dict[str, Any]:
+        """Ledger position, Spark-free: the last epoch the gate numbered,
+        the applied lsn high-watermark and the pending file count."""
         st = self._load()
-        return sum(
-            1
-            for e in st["files"].values()
-            if e["delivered"] and not e["applied"]
-        )
+        return {
+            "last_epoch": st["next_epoch"] - 1 if st["next_epoch"] else None,
+            "applied_hwm": st["applied_hwm"],
+            "pending_files": self.pending(),
+        }

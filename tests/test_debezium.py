@@ -522,3 +522,76 @@ def test_history_cursor_decodes_incrementally(spark, tmp_path):
     # final topic (the add emitted in round 1, not again in round 2)
     full = read_debezium_history(spark, str(d)).collect()
     assert set(ops2) <= {(r["op"], r["ddl_arg"]) for r in full}
+
+
+def test_multi_history_cursor_holds_on_skipped_epochs(spark, tmp_path):
+    """MultiCdcTask(source='debezium', history_path=...): an intent
+    replay of an already-committed epoch, or any epoch skipped as
+    committed, must not advance the history cursor — a schema change
+    that landed after the crash rides the next fresh group instead."""
+    from milvus_cdc_spark.streaming.engine import MultiCdcTask
+
+    def env(lsn, table):
+        return json.dumps({
+            "after": {"conv_id": f"c{lsn}", "turn_idx": 0, "role": "user",
+                      "text": "t", "tool": None},
+            "source": {"lsn": lsn, "ts_us": 1700000000000000 + lsn,
+                       "partition": 0, "table": table},
+            "op": "c", "ts_ms": 1700000000000,
+        })
+
+    def hist(lsn, kind, cols):
+        return json.dumps({
+            "source": {"lsn": lsn}, "ts_ms": 1700000000000, "ddl": "--",
+            "tableChanges": [{
+                "type": kind, "id": '"db"."ta"',
+                "table": {"columns": [
+                    {"name": n, "typeName": t, "position": i + 1}
+                    for i, (n, t) in enumerate(cols)
+                ]},
+            }],
+        })
+
+    log, hdir = tmp_path / "log", tmp_path / "hist"
+    os.makedirs(log)
+    os.makedirs(hdir)
+    (log / "a.json").write_text(
+        "\n".join(env(i, "ta" if i % 2 else "tb") for i in range(1, 11))
+    )
+    (hdir / "h1.json").write_text(hist(0, "CREATE", [("conv_id", "VARCHAR")]))
+    root, ckpt = str(tmp_path / "tables"), str(tmp_path / "ck")
+
+    def drain():
+        t = MultiCdcTask(spark, str(log), root, ckpt, source="debezium",
+                         history_path=str(hdir), max_files_per_trigger=1,
+                         n_buckets=4)
+        t.start(available_now=True)
+        assert t.wait_drained(120)
+        return t
+
+    drain()
+    cursor = os.path.join(ckpt, "history_cursor.json")
+    before = open(cursor).read()
+    # forge a crash after the last epoch committed; a schema change lands
+    led_path = os.path.join(ckpt, "wal_ledger.json")
+    led = json.load(open(led_path))
+    last = led["next_epoch"] - 1
+    led["intent"] = {"epoch": last, "files": [str(log / "a.json")]}
+    with open(led_path, "w") as f:
+        f.write(json.dumps(led))
+    (hdir / "h2.json").write_text(
+        hist(100, "ALTER", [("conv_id", "VARCHAR"), ("score", "BIGINT")])
+    )
+    t2 = drain()
+    assert open(cursor).read() == before
+    assert json.load(open(led_path))["intent"] is None
+    assert "score" not in dict(t2.table("ta").current().columns)
+    # an epoch skipped as committed withholds the cursor even when the
+    # new history rides it
+    t2._apply_files([str(log / "a.json")], last)
+    assert open(cursor).read() == before
+    # the DDL lands with the next fresh group
+    (log / "b.json").write_text("\n".join(env(i, "ta") for i in range(11, 15)))
+    t3 = drain()
+    assert dict(t3.table("ta").current().columns)["score"] == "bigint"
+    assert open(cursor).read() != before

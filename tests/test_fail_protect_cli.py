@@ -167,8 +167,8 @@ def test_registry_wildcard_overlap_and_capacity(tmp_path):
 
 
 def test_position_reports_offsets_and_lineage(spark, tmp_path):
-    """getPosition analogue: source offsets from the streaming checkpoint
-    + applied lsn watermarks per part from lineage — no Spark session."""
+    """getPosition analogue: the source position from the WAL ledger +
+    applied lsn watermarks per part from lineage — no Spark session."""
     log_dir = _write_log(spark, tmp_path, n=800)
     table = str(tmp_path / "ptable")
     ckpt = str(tmp_path / "pckpt")
@@ -178,14 +178,11 @@ def test_position_reports_offsets_and_lineage(spark, tmp_path):
     reg = TaskRegistry(str(tmp_path / "tasks"))
     reg.create("p1", {"log": log_dir, "table": table, "checkpoint": ckpt})
     pos = reg.position("p1")
-    assert pos["last_committed_batch"] >= 1
-    assert pos["source_offsets"], pos
-    # The WAL gate decouples table epochs from Spark batch ids: a trigger
-    # whose files are blocked behind an undelivered lower-lsn file commits
-    # nothing, and a later trigger drains the backlog as several groups —
-    # so epoch count is >=1 and bounded by the file count, not tied 1:1
-    # to last_committed_batch.
-    assert pos["table"]["epochs_committed"] >= 1
+    # 4 files at 2 per epoch: the ledger numbered epochs 0 and 1, applied
+    # every lsn and holds nothing back
+    assert pos["last_epoch"] == 1, pos
+    assert pos["applied_hwm"] == 799 and pos["pending_files"] == 0
+    assert pos["table"]["epochs_committed"] == 2
     ends = pos["applied_end_lsn_per_part"]
     assert ends and max(ends.values()) == 799  # highest applied offset
 

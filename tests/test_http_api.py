@@ -69,7 +69,8 @@ def test_lifecycle_roundtrip_over_http(spark, tmp_path, api):
     code, r = api("get_position", task_name="t1")
     assert code == 200
     pos = r["data"]
-    assert pos["source_offsets"] and pos["applied_end_lsn_per_part"]
+    assert pos["last_epoch"] == 1 and pos["pending_files"] == 0
+    assert pos["applied_hwm"] == 599 and pos["applied_end_lsn_per_part"]
     assert max(pos["applied_end_lsn_per_part"].values()) == 599
 
     code, r = api("pause", task_name="t1")

@@ -133,3 +133,71 @@ def test_status_reports_progress(spark, tmp_path):
     assert st["epochs_committed"] >= 1
     assert st["snapshot_id"].startswith("snap-")
     assert st["summary"]["events_applied"] == 500
+
+
+def test_file_tasks_run_no_streaming_query(spark, tmp_path):
+    """Parquet and Debezium file tasks run on the driver-side poll loop:
+    no Structured Streaming query exists while a CdcTask tails or while a
+    MultiCdcTask drains."""
+    import time
+
+    from milvus_cdc_spark.sources import generate_multi_changelog
+    from milvus_cdc_spark.streaming.engine import MultiCdcTask
+
+    log = str(tmp_path / "log")
+    write_changelog(generate_changelog(spark, 600, n_parts=2), log, n_files=2)
+    task = CdcTask(
+        spark, log, str(tmp_path / "table"), str(tmp_path / "ckpt"),
+        n_buckets=4,
+    )
+    task.start()
+    try:
+        deadline = time.time() + 120
+        while not task.table.current().epochs and time.time() < deadline:
+            assert spark.streams.active == []
+            time.sleep(0.2)
+        assert task.query.isActive and spark.streams.active == []
+    finally:
+        task.pause()
+
+    mlog = str(tmp_path / "mlog")
+    write_changelog(
+        generate_multi_changelog(spark, 600, ["a", "b"]), mlog, n_files=2
+    )
+    multi = MultiCdcTask(
+        spark, mlog, str(tmp_path / "tables"), str(tmp_path / "mckpt"),
+        n_buckets=4,
+    )
+    multi.start(available_now=True)
+    assert spark.streams.active == []
+    assert multi.wait_drained(120)
+    assert sorted(multi.tables) == ["a", "b"]
+    assert multi.status()["wal_pending_files"] == 0
+
+
+def test_kafka_task_is_the_one_streaming_query(spark, tmp_path, monkeypatch):
+    """A Kafka task still runs as a Structured Streaming query whose
+    foreachBatch applies each micro-batch (broker-less: the decoded topic
+    stream is stood in by a file stream of the same changelog)."""
+    from milvus_cdc_spark import schemas as S
+    from milvus_cdc_spark.streaming import engine
+
+    log = str(tmp_path / "log")
+    write_changelog(generate_changelog(spark, 600, n_parts=2), log, n_files=2)
+    monkeypatch.setattr(
+        engine,
+        "_kafka_stream",
+        lambda spark, path, opts, multi_table: spark.readStream.schema(
+            S.CHANGELOG_SCHEMA
+        ).parquet(log),
+    )
+    task = CdcTask(
+        spark, "topic-a", str(tmp_path / "table"), str(tmp_path / "ckpt"),
+        n_buckets=4, source="kafka",
+        kafka_options={"bootstrap_servers": "b:9092"},
+    )
+    from pyspark.sql.streaming import StreamingQuery
+
+    assert isinstance(task.start(available_now=True), StreamingQuery)
+    assert task.wait_drained(120)
+    assert _table_tuples(spark, task) == _oracle_tuples(spark, log)
