@@ -1030,7 +1030,7 @@ def _q_cdc_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_cdc_mor_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ENGINE probe for the merge-on-read write mode (Iceberg v2 MOR
-    analogue, operators/apply.py::_append_delta +
+    analogue, operators/apply.py::_write_buckets +
     plans/manifest.py::resolve_last_writer_stored): the flagship 3-epoch
     replay against a ``write_mode="mor"`` table — epochs append deduped
     delta files (write cost O(batch), the 100 TB answer to CoW write

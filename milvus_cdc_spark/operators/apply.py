@@ -12,10 +12,9 @@ declarative Spark stages instead of a goroutine graph:
    max(ord))`` over a decimal-packed (ts, rank, lsn) scalar (a
    whole-stage-codegen HashAggregate with map-side partial merge — the
    skew answer), then a skew-proof winner-recovery join keyed on
-   (key, ord); see ``dedup_last_writer``. An explicit two-stage salted
-   variant (``salt_partitions``) is also provided. Ordering semantics:
-   higher ``(ts, rank, lsn)`` wins, rank DELETE(0) < INSERT/UPSERT(2) —
-   i.e. delete applies before insert at equal ts, exactly the reference's
+   (key, ord); see ``dedup_last_writer``. Ordering semantics: higher
+   ``(ts, rank, lsn)`` wins, rank DELETE(0) < INSERT/UPSERT(2) — i.e.
+   delete applies before insert at equal ts, exactly the reference's
    intra-pack sort rule (replicate_channel_manager.go:1170-1173).
 3. **MERGE (copy-on-write, bucket-pruned)** — touched buckets =
    ``pmod(xxhash64(conv_id), n_buckets)`` over the actions; ONLY those
@@ -36,18 +35,21 @@ skipped (see plans/manifest.py).
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import time
+import uuid
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from milvus_cdc_spark import schemas as S
-from milvus_cdc_spark.plans.manifest import Manifest, SnapshotTable
+from milvus_cdc_spark.plans.manifest import SnapshotTable
 
 _BASE_PAYLOAD = list(S.PAYLOAD_COLUMNS)  # role, text, tool
+_LOG = logging.getLogger("milvus_cdc_spark.apply")
 
 # runs the per-epoch offset-integrity scan concurrently with the merge
 # (see apply_batch); sized at 2x MultiCdcTask's default per-batch table
@@ -93,11 +95,7 @@ def _ord_col(op_col):
     )
 
 
-def dedup_last_writer(
-    dml: DataFrame,
-    payload_cols: list[str],
-    salt_partitions: int | None = None,
-) -> DataFrame:
+def dedup_last_writer(dml: DataFrame, payload_cols: list[str]) -> DataFrame:
     """Surviving action per (conv_id, turn_idx): max by (ts, rank, lsn).
 
     Two-phase, sort-free plan:
@@ -116,19 +114,7 @@ def dedup_last_writer(
     Returns columns: conv_id, turn_idx, op, ts, lsn, part, *payload_cols.
     """
     keyed = dml.withColumn("_ord", _ord_col(F.col("op")))
-    if salt_partitions and salt_partitions > 1:
-        # explicit two-stage salted reduction (max is commutative, so this
-        # is exact): hot keys first reduce within salt groups, then across
-        stage1 = keyed.groupBy(
-            "conv_id",
-            "turn_idx",
-            F.pmod(F.xxhash64("lsn"), F.lit(salt_partitions)).alias("_salt"),
-        ).agg(F.max("_ord").alias("_ord_max"))
-        w = stage1.groupBy("conv_id", "turn_idx").agg(
-            F.max("_ord_max").alias("_ord")
-        )
-    else:
-        w = keyed.groupBy("conv_id", "turn_idx").agg(F.max("_ord").alias("_ord"))
+    w = keyed.groupBy("conv_id", "turn_idx").agg(F.max("_ord").alias("_ord"))
     # CONTRACT: lsn is the log offset and therefore unique — the same
     # guarantee every WAL/binlog consumer relies on. Under it, exactly one
     # event per key carries max(_ord) (ord embeds lsn) and this join emits
@@ -242,7 +228,6 @@ def compose_patch_actions(
     dml: DataFrame,
     carry_cols: list[str],
     payload_cols: list[str],
-    salt_partitions: int | None = None,
 ) -> DataFrame:
     """Batch-compose full-row anchors (INSERT/UPSERT/DELETE) with
     partial-row PATCH events into ONE action per key (schemas.OP_PATCH
@@ -270,7 +255,7 @@ def compose_patch_actions(
     """
     anchors = dml.filter(F.col("op") != S.OP_PATCH)
     patches = dml.filter(F.col("op") == S.OP_PATCH)
-    w = dedup_last_writer(anchors, carry_cols, salt_partitions).withColumn(
+    w = dedup_last_writer(anchors, carry_cols).withColumn(
         "_aord", _ord_col(F.col("op"))
     )
     p = patches.withColumn("_pord", _ord_col(F.col("op")))
@@ -543,50 +528,25 @@ def merge_actions(
     )
 
 
-def _append_delta(
-    spark: SparkSession,
-    table: SnapshotTable,
-    m: Manifest,
-    actions: DataFrame,
-    adds: list[tuple[str, str]],
+def _write_buckets(
+    table: SnapshotTable, out: DataFrame, cols: list[str], epoch: int,
     touched: list[int],
-    epoch: int,
-):
-    """Merge-on-read epoch write: deduped actions → delta parquet appended
-    to each touched bucket's file list (never rewriting existing files).
+) -> tuple[int, Any, dict[int, list[str]]]:
+    """The one epoch write: an already write-partitioned frame with a
+    ``bucket`` column → ``data/e<epoch>/bucket=<b>/`` parquet files.
 
-    Same write-parallelism shape as the CoW merge: the repartition key
-    carries a conv-derived salt past the bucket count so every core gets
-    a writer task, while partitionBy still emits whole-bucket files.
-    Returns (n_live_actions, max_ts, new_files_per_bucket) — the NEW
-    delta files only; the commit appends them to each bucket's CURRENT
-    list (manifest ``append_buckets``), which is what lets the epoch
-    commit compose with a concurrent background fold instead of
-    resurrecting folded-away files."""
-    physical_cols = [c for c, _ in m.columns]
-    out_dir_rel = os.path.join("data", f"e{epoch}")
-    out_dir = os.path.join(table.root, out_dir_rel)
-    ordered_cols = physical_cols + [
-        c for c, _ in adds if c not in physical_cols
-    ] + ["alive", "extra"]
-    delta = actions.withColumn("alive", F.col("op") != F.lit(S.OP_DELETE))
-    nb = m.n_buckets
-    cores = spark.sparkContext.defaultParallelism
-    write_factor = max(1, min(8, (2 * cores) // max(1, len(touched))))
-    import uuid
-
-    from pyspark.sql import Observation
-
-    obs = Observation(f"delta_e{epoch}_{uuid.uuid4().hex[:8]}")
+    Table stats ride the write job itself (an Observation collects its
+    metrics during the action — no second pass over the data). Returns
+    (live rows written, max ts written, {touched bucket: [relative
+    files]}); the caller decides whether those lists replace a bucket's
+    chain (CoW) or append to it (MOR)."""
+    out_rel = os.path.join("data", f"e{epoch}")
+    # unique per (table, epoch, attempt): MultiCdcTask applies several
+    # tables' epochs CONCURRENTLY, and observation names must not collide
+    # across simultaneously-active jobs on one session
+    obs = Observation(f"apply_e{epoch}_{uuid.uuid4().hex[:8]}")
     (
-        delta.withColumn(
-            "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(nb)).cast("int")
-        )
-        .withColumn(
-            "_salt", F.pmod(F.xxhash64("conv_id", F.lit(7)), F.lit(write_factor))
-        )
-        .repartition(len(touched) * write_factor, "bucket", "_salt")
-        .select(*ordered_cols, "bucket")
+        out.select(*cols, "bucket")
         .observe(
             obs,
             F.sum(F.col("alive").cast("long")).alias("k"),
@@ -594,22 +554,10 @@ def _append_delta(
         )
         .write.mode("overwrite")
         .partitionBy("bucket")
-        .parquet(out_dir)
+        .parquet(os.path.join(table.root, out_rel))
     )
     stats = obs.get
-    appended: dict[int, list[str]] = {}
-    for b in touched:
-        bdir = os.path.join(out_dir, f"bucket={b}")
-        appended[b] = (
-            [
-                os.path.join(out_dir_rel, f"bucket={b}", f)
-                for f in sorted(os.listdir(bdir))
-                if f.endswith(".parquet")
-            ]
-            if os.path.isdir(bdir)
-            else []
-        )
-    return stats["k"] or 0, stats["mt"], appended
+    return stats["k"] or 0, stats["mt"], table.bucket_files(out_rel, touched)
 
 
 def apply_batch(
@@ -618,8 +566,6 @@ def apply_batch(
     batch_df: DataFrame,
     epoch: int,
     *,
-    salt_partitions: int | None = None,
-    write_lineage: bool = True,
     on_malformed: str = "fail",
     constraints: list[str] | None = None,
     on_violation: str = "fail",
@@ -932,9 +878,9 @@ def apply_batch(
         # equivalent there.)
         if combined_drops or combined_truncate:
             dml = dml.filter(_new_drop_filter(combined_drops, combined_truncate))
-        actions = compose_patch_actions(dml, carry_cols, payload_cols, salt_partitions)
+        actions = compose_patch_actions(dml, carry_cols, payload_cols)
     else:
-        actions = dedup_last_writer(dml, carry_cols, salt_partitions)
+        actions = dedup_last_writer(dml, carry_cols)
         if combined_drops or combined_truncate:
             actions = actions.filter(_new_drop_filter(combined_drops, combined_truncate))
 
@@ -944,120 +890,98 @@ def apply_batch(
     appended: dict[int, list[str]] = {}
     n_keys = 0
     max_ts = None
-    if touched and m.write_mode == "mor" and not has_patches:
-        # ---- merge-on-read epoch: APPEND the deduped actions as delta
-        # files — no target read, no merge join, write cost O(batch)
-        # regardless of table size (the CoW path's write amplification is
-        # O(live rows in touched buckets) per epoch, which at uniform key
-        # spread means rewriting the whole accumulated table every epoch;
-        # measured: 200M-event CoW drain decays to 489k ev/s while MOR
-        # holds flat — BASELINE.md). Reads resolve last-writer per key
-        # (manifest.resolve_last_writer_stored) until compaction folds the
-        # deltas; DELETE actions append as alive=false tombstones so they
-        # defeat older stored rows at resolution exactly like the CoW
-        # merge comparison. Iceberg v2 MOR analogue (delete files +
-        # rewrite_data_files); the reference's writer likewise appends to
-        # the target log and lets Milvus resolve (channel_writer.go).
-        n_keys, max_ts, appended = _append_delta(
-            spark, table, m, actions, adds, touched, epoch
-        )
-        tp = _mark("merge_write", tp)
-    elif touched:
-        target = table.read(spark, manifest=m, buckets=touched, logical=False)
-        if new_drops or new_truncate:
-            # historical watermarks were already applied inside read();
-            # only THIS batch's new drops/truncate need filtering here
-            target = target.filter(_new_drop_filter(new_drops, new_truncate))
-        # stored rows may predate an ADD_COLUMN in this batch
-        for c, typ in adds:
-            if c not in physical_cols:
-                target = target.withColumn(c, F.lit(None).cast(typ))
-        # stored rows were written at the pre-WIDEN type — cast so the
-        # union with the (already wide) action side is exact and the
-        # rewritten buckets come out at the promoted type
-        for c, t in widen_applied.items():
-            if c in target.columns:
-                target = target.withColumn(c, F.col(c).cast(t))
-        # promote stored dynamic-bag values into their typed columns and
-        # strip the promoted keys (mirrors the action side): rewritten
-        # buckets come out upgraded, and the logical read's coalesce
-        # becomes a no-op for them
-        for c in evolved_payload:
-            target = target.withColumn(
-                c,
-                F.coalesce(
-                    F.col(c),
-                    bag_decode(F.col("extra").getItem(c), col_types.get(c, "string")),
-                ),
-            )
-        target = _strip_promoted(target, evolved_payload)
-
-        out_dir_rel = os.path.join("data", f"e{epoch}")
-        out_dir = os.path.join(table.root, out_dir_rel)
-        ordered_cols = [c for c, _ in m.columns] + [
+    if touched:
+        ordered_cols = physical_cols + [
             c for c, _ in adds if c not in physical_cols
         ] + ["alive", "extra"]
-        # write parallelism must not be capped by bucket count: the merge
+        # write parallelism must not be capped by bucket count: the write
         # shuffle key carries a conv-derived salt so every core gets a
         # writer task (each task still emits whole-bucket files via
         # partitionBy; files per bucket ≈ write_factor, bounded so the
         # table never fragments)
         cores = spark.sparkContext.defaultParallelism
-        write_factor = max(1, min(8, (2 * cores) // max(1, len(touched))))
-        if has_patches:
-            # PATCH batches take the per-column-ordinal merge. On a MOR
-            # table this is the one epoch shape that READS (patches are
-            # read-modify-write by definition) — still bucket-pruned, and
-            # the WRITE stays O(changed rows): only rows the epoch
-            # actually changed (`_applied`) append as delta; rewriting
-            # nothing. A patch-free MOR epoch never reaches here.
-            merged = merge_patched_actions(
-                target, actions, carry_cols, nb, write_factor,
-                n_parts=len(touched) * write_factor,
+        write_factor = max(1, min(8, (2 * cores) // len(touched)))
+        n_parts = len(touched) * write_factor
+        if m.write_mode == "mor" and not has_patches:
+            # ---- merge-on-read epoch: APPEND the deduped actions as delta
+            # files — no target read, no merge join, write cost O(batch)
+            # regardless of table size (the CoW path's write amplification is
+            # O(live rows in touched buckets) per epoch, which at uniform key
+            # spread means rewriting the whole accumulated table every epoch;
+            # measured: 200M-event CoW drain decays to 489k ev/s while MOR
+            # holds flat — BASELINE.md). Reads resolve last-writer per key
+            # (manifest.resolve_last_writer_stored) until compaction folds the
+            # deltas; DELETE actions append as alive=false tombstones so they
+            # defeat older stored rows at resolution exactly like the CoW
+            # merge comparison. Iceberg v2 MOR analogue (delete files +
+            # rewrite_data_files); the reference's writer likewise appends to
+            # the target log and lets Milvus resolve (channel_writer.go).
+            out = (
+                actions.withColumn("alive", F.col("op") != F.lit(S.OP_DELETE))
+                .withColumn("bucket", bucket_of)
+                .withColumn(
+                    "_salt",
+                    F.pmod(F.xxhash64("conv_id", F.lit(7)), F.lit(write_factor)),
+                )
+                .repartition(n_parts, "bucket", "_salt")
             )
-            if m.write_mode == "mor":
-                merged = merged.filter(F.col("_applied"))
-            merged = merged.drop("_applied")
         else:
-            merged = merge_actions(
-                target, actions, carry_cols, nb, write_factor,
-                n_parts=len(touched) * write_factor,
-            )
-        # table stats ride the write job itself (Observation = accumulator
-        # metrics collected during the action) — no second pass over data
-        import uuid
-
-        from pyspark.sql import Observation
-
-        # unique per (table, epoch, attempt): MultiCdcTask applies several
-        # tables' epochs CONCURRENTLY, and observation names must not
-        # collide across simultaneously-active jobs on one session
-        obs = Observation(f"apply_e{epoch}_{uuid.uuid4().hex[:8]}")
-        (
-            merged.select(*ordered_cols, F.col("_bucket").alias("bucket"))
-            .observe(
-                obs,
-                F.sum(F.col("alive").cast("long")).alias("k"),
-                F.max("ts").alias("mt"),
-            )
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(out_dir)
+            target = table.read(spark, manifest=m, buckets=touched, logical=False)
+            if new_drops or new_truncate:
+                # historical watermarks were already applied inside read();
+                # only THIS batch's new drops/truncate need filtering here
+                target = target.filter(_new_drop_filter(new_drops, new_truncate))
+            # stored rows may predate an ADD_COLUMN in this batch
+            for c, typ in adds:
+                if c not in physical_cols:
+                    target = target.withColumn(c, F.lit(None).cast(typ))
+            # stored rows were written at the pre-WIDEN type — cast so the
+            # union with the (already wide) action side is exact and the
+            # rewritten buckets come out at the promoted type
+            for c, t in widen_applied.items():
+                if c in target.columns:
+                    target = target.withColumn(c, F.col(c).cast(t))
+            # promote stored dynamic-bag values into their typed columns and
+            # strip the promoted keys (mirrors the action side): rewritten
+            # buckets come out upgraded, and the logical read's coalesce
+            # becomes a no-op for them
+            for c in evolved_payload:
+                target = target.withColumn(
+                    c,
+                    F.coalesce(
+                        F.col(c),
+                        bag_decode(F.col("extra").getItem(c), col_types.get(c, "string")),
+                    ),
+                )
+            target = _strip_promoted(target, evolved_payload)
+            if has_patches:
+                # PATCH batches take the per-column-ordinal merge. On a MOR
+                # table this is the one epoch shape that READS (patches are
+                # read-modify-write by definition) — still bucket-pruned, and
+                # the WRITE stays O(changed rows): only rows the epoch
+                # actually changed (`_applied`) append as delta; rewriting
+                # nothing. A patch-free MOR epoch never reaches here.
+                merged = merge_patched_actions(
+                    target, actions, carry_cols, nb, write_factor, n_parts=n_parts
+                )
+                if m.write_mode == "mor":
+                    merged = merged.filter(F.col("_applied"))
+                merged = merged.drop("_applied")
+            else:
+                merged = merge_actions(
+                    target, actions, carry_cols, nb, write_factor, n_parts=n_parts
+                )
+            # the merge output is already partitioned for the write
+            out = merged.withColumnRenamed("_bucket", "bucket")
+        n_keys, max_ts, written = _write_buckets(
+            table, out, ordered_cols, epoch, touched
         )
-        stats = obs.get
-        n_keys, max_ts = stats["k"] or 0, stats["mt"]
         tp = _mark("merge_write", tp)
-        written = {b: [] for b in touched}
-        for b in touched:
-            bdir = os.path.join(out_dir, f"bucket={b}")
-            if os.path.isdir(bdir):
-                written[b] = [
-                    os.path.join(out_dir_rel, f"bucket={b}", f)
-                    for f in sorted(os.listdir(bdir))
-                    if f.endswith(".parquet")
-                ]
+        # MOR (delta or patched): the new files APPEND to each bucket's
+        # CURRENT chain — a delta, so the commit composes with a concurrent
+        # background fold instead of resurrecting folded-away files. CoW:
+        # the rewritten buckets replace theirs.
         if m.write_mode == "mor":
-            # patched MOR epoch: changed rows only → append to the chain
             appended = written
         else:
             replaced = written
@@ -1080,58 +1004,57 @@ def apply_batch(
     # ---- 4. lineage + metrics: driver-side pyarrow writes (the rows are
     # already on the driver — no Spark job). Per-epoch file names make a
     # crash-replay overwrite the identical file: idempotent by construction.
-    if write_lineage:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        lin_dir = os.path.join(table.root, "lineage")
-        os.makedirs(lin_dir, exist_ok=True)
-        if per_part:
-            pq.write_table(
-                pa.table(
-                    {
-                        "epoch": pa.array([epoch] * len(per_part), pa.int64()),
-                        "part": pa.array([r["part"] for r in per_part], pa.int32()),
-                        "start_lsn": pa.array([r["start_lsn"] for r in per_part], pa.int64()),
-                        "end_lsn": pa.array([r["end_lsn"] for r in per_part], pa.int64()),
-                        "n_insert": pa.array([r["n_insert"] for r in per_part], pa.int64()),
-                        "n_delete": pa.array([r["n_delete"] for r in per_part], pa.int64()),
-                        "n_ddl": pa.array([r["n_ddl"] for r in per_part], pa.int64()),
-                        "snapshot_id": pa.array([snap_id] * len(per_part), pa.string()),
-                    }
-                ),
-                os.path.join(lin_dir, f"epoch-{epoch}.parquet"),
-            )
-        met_dir = os.path.join(table.root, "metrics")
-        os.makedirs(met_dir, exist_ok=True)
-        now = time.time()
-        # end-to-end lag gauge (reference replicate_tt lag,
-        # server/metrics/metrics.go:107-137): wall clock at commit minus the
-        # newest event ts merged this epoch. max_ts is a naive UTC datetime
-        # (session TZ is pinned UTC in session.py).
-        lag_sec = None
-        if max_ts is not None:
-            from datetime import timezone
-
-            lag_sec = now - max_ts.replace(tzinfo=timezone.utc).timestamp()
+    lin_dir = os.path.join(table.root, "lineage")
+    os.makedirs(lin_dir, exist_ok=True)
+    if per_part:
         pq.write_table(
             pa.table(
                 {
-                    "epoch": pa.array([epoch], pa.int64()),
-                    "n_events": pa.array([n_events], pa.int64()),
-                    "n_insert": pa.array([n_insert], pa.int64()),
-                    "n_delete": pa.array([n_delete], pa.int64()),
-                    "n_ddl": pa.array([n_ddl], pa.int64()),
-                    "n_dlq": pa.array([n_dlq], pa.int64()),
-                    "n_keys": pa.array([n_keys], pa.int64()),
-                    "max_ts": pa.array([max_ts], pa.timestamp("us")),
-                    "apply_sec": pa.array([now - t0], pa.float64()),
-                    "lag_sec": pa.array([lag_sec], pa.float64()),
-                    "snapshot_id": pa.array([snap_id], pa.string()),
+                    "epoch": pa.array([epoch] * len(per_part), pa.int64()),
+                    "part": pa.array([r["part"] for r in per_part], pa.int32()),
+                    "start_lsn": pa.array([r["start_lsn"] for r in per_part], pa.int64()),
+                    "end_lsn": pa.array([r["end_lsn"] for r in per_part], pa.int64()),
+                    "n_insert": pa.array([r["n_insert"] for r in per_part], pa.int64()),
+                    "n_delete": pa.array([r["n_delete"] for r in per_part], pa.int64()),
+                    "n_ddl": pa.array([r["n_ddl"] for r in per_part], pa.int64()),
+                    "snapshot_id": pa.array([snap_id] * len(per_part), pa.string()),
                 }
             ),
-            os.path.join(met_dir, f"epoch-{epoch}.parquet"),
+            os.path.join(lin_dir, f"epoch-{epoch}.parquet"),
         )
+    met_dir = os.path.join(table.root, "metrics")
+    os.makedirs(met_dir, exist_ok=True)
+    now = time.time()
+    # end-to-end lag gauge (reference replicate_tt lag,
+    # server/metrics/metrics.go:107-137): wall clock at commit minus the
+    # newest event ts merged this epoch. max_ts is a naive UTC datetime
+    # (session TZ is pinned UTC in session.py).
+    lag_sec = None
+    if max_ts is not None:
+        from datetime import timezone
+
+        lag_sec = now - max_ts.replace(tzinfo=timezone.utc).timestamp()
+    pq.write_table(
+        pa.table(
+            {
+                "epoch": pa.array([epoch], pa.int64()),
+                "n_events": pa.array([n_events], pa.int64()),
+                "n_insert": pa.array([n_insert], pa.int64()),
+                "n_delete": pa.array([n_delete], pa.int64()),
+                "n_ddl": pa.array([n_ddl], pa.int64()),
+                "n_dlq": pa.array([n_dlq], pa.int64()),
+                "n_keys": pa.array([n_keys], pa.int64()),
+                "max_ts": pa.array([max_ts], pa.timestamp("us")),
+                "apply_sec": pa.array([now - t0], pa.float64()),
+                "lag_sec": pa.array([lag_sec], pa.float64()),
+                "snapshot_id": pa.array([snap_id], pa.string()),
+            }
+        ),
+        os.path.join(met_dir, f"epoch-{epoch}.parquet"),
+    )
 
     # ---- 5. atomic snapshot commit (exactly-once gate)
     table.commit(
@@ -1151,10 +1074,13 @@ def apply_batch(
         ),
         base=m,
     )
-    if os.environ.get("CDC_TIMINGS"):
-        import sys
-
-        print(f"[apply e{epoch}] {json.dumps(timings)}", file=sys.stderr)
+    # one structured record per committed epoch (fields also set on the
+    # record as attributes, for handlers that ship them as-is)
+    fields = {
+        "epoch": epoch, "n_events": n_events, "timings": timings,
+        "lag_sec": lag_sec,
+    }
+    _LOG.info("epoch committed %s", json.dumps(fields), extra=fields)
     return {
         "epoch": epoch,
         "skipped": False,
@@ -1194,7 +1120,6 @@ def bootstrap_table(
     *,
     epoch: int = -1,
     n_buckets: int = 16,
-    salt_partitions: int | None = None,
     write_mode: str = "cow",
 ) -> dict[str, Any]:
     """Initial full load (snapshot phase) of an existing dataset; the
@@ -1277,6 +1202,4 @@ def bootstrap_table(
         F.lit(None).cast("string").alias("ddl_arg"),
         extra.alias("extra"),
     )
-    return apply_batch(
-        spark, table, ev, epoch, salt_partitions=salt_partitions
-    )
+    return apply_batch(spark, table, ev, epoch)

@@ -39,9 +39,11 @@ is required):
   across hosts.
 
 Data files (parquet) are written by Spark through its own Hadoop
-FileSystem layer and referenced by name in the manifest — they never
-pass through this interface except for directory listings during
-compaction planning and vacuum deletes.
+FileSystem layer and referenced by name in the manifest — they pass
+through this interface only for vacuum deletes and for the per-bucket
+directory listing that follows every epoch write and every fold
+(``SnapshotTable.bucket_files``), which turns what Spark wrote into the
+next manifest's file lists.
 
 ``get_fs(path)`` resolves an implementation by scheme; unknown schemes
 raise with the table above as the implementation contract.

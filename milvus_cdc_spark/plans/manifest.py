@@ -49,7 +49,7 @@ import json
 import os
 import time
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 
@@ -859,42 +859,94 @@ class SnapshotTable:
         for k, v in (summary_delta or {}).items():
             summary[k] = summary.get(k, 0) + v if isinstance(v, (int, float)) else v
         summary["last_epoch"] = epoch  # absolute, never summed
-        epochs = dict(m.epochs)
         snap = self._snapshot_id(epoch)
-        epochs[str(epoch)] = snap
-        nm = Manifest(
+        nm = replace(
+            m,
             version=m.version + 1,
             snapshot_id=snap,
-            n_buckets=m.n_buckets,
             columns=columns,
             renames=ren,
             drop_watermarks=wm,
             files=files,
-            epochs=epochs,
+            epochs={**m.epochs, str(epoch): snap},
             added=added,
             summary=summary,
             truncate_watermark=trunc,
             pending_widens=pending,
-            write_mode=m.write_mode,
             dropped=sorted(dropped),
         )
         self._write_manifest(nm)
         return nm
 
     # -- maintenance (Iceberg rewrite_data_files / expire_snapshots) -----
+    def bucket_files(self, rel_dir: str, buckets) -> dict[int, list[str]]:
+        """Parquet files a ``partitionBy("bucket")`` write left under
+        ``rel_dir`` (relative to the root), per bucket, as the relative
+        paths a manifest file list holds; a bucket with no file maps to
+        ``[]``. The one listing every epoch write and fold goes through."""
+        out: dict[int, list[str]] = {}
+        for b in buckets:
+            sub = os.path.join(rel_dir, f"bucket={b}")
+            out[b] = [
+                os.path.join(sub, f)
+                for f in sorted(self.fs.listdir(os.path.join(self.root, sub)))
+                if f.endswith(".parquet")
+            ]
+        return out
+
+    def _rewrite_buckets(
+        self, df: DataFrame, n_buckets: int, buckets: list[int], out_rel: str
+    ) -> dict[int, list[str]]:
+        """Fold rewrite shared by ``compact`` and ``compact_buckets``: one
+        file per bucket of ``buckets``, rows sorted by key. Returns the new
+        file lists (``bucket_files``)."""
+        (
+            df.withColumn(
+                "bucket",
+                F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"),
+            )
+            .repartition(len(buckets), "bucket")
+            # Iceberg sort-order analogue (rewrite_data_files sort
+            # strategy): folded files are ordered by (conv_id, turn_idx),
+            # so every row group's min/max stats form tight disjoint key
+            # ranges and a point lookup's pushed filter skips all but ~one
+            # row group per file. Leading "bucket" satisfies the
+            # dynamic-partition writer's required ordering, so it adds NO
+            # extra sort of its own. Epoch writes stay unsorted — sorting
+            # belongs in the read-optimizing step, not the ingest hot path.
+            .sortWithinPartitions("bucket", "conv_id", "turn_idx")
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(os.path.join(self.root, out_rel))
+        )
+        return self.bucket_files(out_rel, buckets)
+
+    def _commit_if_current(self, planned: Manifest, nm: Manifest, op: str) -> Manifest:
+        """Commit ``nm`` under the lease iff CURRENT is still the version
+        ``planned`` was read at; otherwise raise — the offline maintenance
+        operations (``op``: compact/convert/rollback) never rebase."""
+        with self.commit_lease():
+            cur_v = self._current_version()
+            if cur_v != planned.version:
+                raise CommitConflictError(
+                    f"{self.root}: {op} planned against v{planned.version} "
+                    f"but CURRENT is v{cur_v} — a writer committed "
+                    f"meanwhile; pause the task and re-run {op}"
+                )
+            self._write_manifest(nm)
+        return nm
+
     def compact(
         self,
         spark: SparkSession,
         *,
         drop_tombstones: bool = False,
         clear_drop_watermarks: bool = False,
-        files_per_bucket: int = 1,
         n_buckets: int | None = None,
     ) -> Manifest:
-        """Rewrite every bucket into ``files_per_bucket`` files, physically
-        removing rows dead under a partition-drop watermark (clearing the
-        merge-on-read read cost) — the analogue of Iceberg's
-        ``rewrite_data_files``.
+        """Rewrite every bucket into one file, physically removing rows
+        dead under a partition-drop watermark (clearing the merge-on-read
+        read cost) — the analogue of Iceberg's ``rewrite_data_files``.
 
         Drop AND truncate WATERMARKS are RETAINED by default even though
         the stored rows they killed are physically gone: apply_batch still
@@ -912,50 +964,14 @@ class SnapshotTable:
         df = self.read(spark, manifest=m, logical=False)  # drops applied
         if drop_tombstones:
             df = df.filter(F.coalesce(F.col("alive"), F.lit(True)))
-        out_rel = f"data/compact-v{m.version}"
-        out_dir = os.path.join(self.root, out_rel)
-        (
-            df.withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("conv_id"), F.lit(nb)).cast("int"),
-            )
-            # salt beyond the bucket key — hash-partitioning on bucket alone
-            # would land each bucket in ONE task no matter the partition
-            # count (same fix as the merge write in operators/apply.py)
-            .withColumn(
-                "_csalt",
-                F.pmod(F.xxhash64("conv_id", F.lit(13)), F.lit(files_per_bucket)),
-            )
-            .repartition(nb * files_per_bucket, "bucket", "_csalt")
-            .drop("_csalt")
-            # Iceberg sort-order analogue (rewrite_data_files sort
-            # strategy): compacted files are ordered by (conv_id,
-            # turn_idx), so every row group's min/max stats form tight
-            # disjoint key ranges and a point lookup's pushed filter
-            # skips all but ~one row group per file. Leading "bucket"
-            # satisfies the dynamic-partition writer's required ordering,
-            # so it adds NO extra sort of its own. Epoch writes stay
-            # unsorted — sorting belongs in the read-optimizing step,
-            # not the ingest hot path.
-            .sortWithinPartitions("bucket", "conv_id", "turn_idx")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(out_dir)
+        written = self._rewrite_buckets(
+            df, nb, list(range(nb)), f"data/compact-v{m.version}"
         )
-        files: dict[str, list[str]] = {}
-        for b in range(nb):
-            bdir = os.path.join(out_dir, f"bucket={b}")
-            rels = [
-                os.path.join(out_rel, f"bucket={b}", f)
-                for f in sorted(self.fs.listdir(bdir))
-                if f.endswith(".parquet")
-            ]
-            if rels:
-                files[str(b)] = rels
         summary = {**m.summary, "last_compaction_version": m.version}
         if nb != m.n_buckets:
             summary["rebucketed_from"] = m.n_buckets
-        nm = Manifest(
+        nm = replace(
+            m,
             version=m.version + 1,
             snapshot_id=self._snapshot_id(
                 f"compact-{m.version}"
@@ -963,36 +979,14 @@ class SnapshotTable:
                 else f"rebucket-{m.version}-{nb}"
             ),
             n_buckets=nb,
-            columns=[list(c) for c in m.columns],
-            renames=dict(m.renames),
-            drop_watermarks={} if clear_drop_watermarks else dict(m.drop_watermarks),
-            files=files,
-            epochs=dict(m.epochs),
-            added=list(m.added),
+            drop_watermarks={} if clear_drop_watermarks else m.drop_watermarks,
+            files={str(b): rels for b, rels in written.items() if rels},
             summary=summary,
             truncate_watermark=None if clear_drop_watermarks else m.truncate_watermark,
-            pending_widens=dict(m.pending_widens),
-            write_mode=m.write_mode,
-            dropped=list(m.dropped),
         )
-        with self.commit_lease():
-            cur_v = self._current_version()
-            if cur_v != m.version:
-                raise CommitConflictError(
-                    f"{self.root}: compaction planned against v{m.version} "
-                    f"but CURRENT is v{cur_v} — a writer committed during "
-                    "the rewrite; re-run compact"
-                )
-            self._write_manifest(nm)
-        return nm
+        return self._commit_if_current(m, nm, "compact")
 
-    def compact_buckets(
-        self,
-        spark: SparkSession,
-        buckets: list[int],
-        *,
-        files_per_bucket: int = 1,
-    ) -> dict[str, Any]:
+    def compact_buckets(self, spark: SparkSession, buckets: list[int]) -> dict[str, Any]:
         """Fold ONLY the given buckets' file chains (per-bucket
         ``rewrite_data_files``) — the merge-on-read housekeeping primitive:
         cost ∝ the offending delta chains, never O(table), so one hot
@@ -1024,38 +1018,10 @@ class SnapshotTable:
         df = self.read(
             spark, manifest=m, buckets=sorted(planned), logical=False
         )  # drops applied; MOR chains resolved to one winner per key
-        out_rel = f"data/fold-v{m.version}"
-        out_dir = os.path.join(self.root, out_rel)
-        (
-            df.withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("conv_id"), F.lit(m.n_buckets)).cast("int"),
-            )
-            .withColumn(
-                "_csalt",
-                F.pmod(F.xxhash64("conv_id", F.lit(13)), F.lit(files_per_bucket)),
-            )
-            .repartition(len(planned) * files_per_bucket, "bucket", "_csalt")
-            .drop("_csalt")
-            # same sort order as compact(): folded files carry tight
-            # (conv_id, turn_idx) row-group stats for point lookups
-            .sortWithinPartitions("bucket", "conv_id", "turn_idx")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(out_dir)
+        # a bucket whose every row was dead folds to [] → it empties
+        folded_files = self._rewrite_buckets(
+            df, m.n_buckets, list(planned), f"data/fold-v{m.version}"
         )
-        folded_files: dict[int, list[str]] = {}
-        for b in planned:
-            bdir = os.path.join(out_dir, f"bucket={b}")
-            folded_files[b] = (
-                [
-                    os.path.join(out_rel, f"bucket={b}", f)
-                    for f in sorted(self.fs.listdir(bdir))
-                    if f.endswith(".parquet")
-                ]
-                if self.fs.listdir(bdir)
-                else []  # every row was dead → bucket empties
-            )
         with self.commit_lease():
             cur = self.current()
             folded, skipped = [], []
@@ -1074,21 +1040,12 @@ class SnapshotTable:
             if not folded:
                 return {"folded": [], "skipped": sorted(skipped),
                         "version": cur.version}
-            nm = Manifest(
+            nm = replace(
+                cur,
                 version=cur.version + 1,
                 snapshot_id=self._snapshot_id(f"fold-{cur.version}"),
-                n_buckets=cur.n_buckets,
-                columns=[list(c) for c in cur.columns],
-                renames=dict(cur.renames),
-                drop_watermarks=dict(cur.drop_watermarks),
                 files=files,
-                epochs=dict(cur.epochs),
-                added=list(cur.added),
                 summary={**cur.summary, "last_fold_version": cur.version},
-                truncate_watermark=cur.truncate_watermark,
-                pending_widens=dict(cur.pending_widens),
-                write_mode=cur.write_mode,
-                dropped=list(cur.dropped),
             )
             self._write_manifest(nm)
         return {"folded": sorted(folded), "skipped": sorted(skipped),
@@ -1138,32 +1095,14 @@ class SnapshotTable:
         if m.write_mode == write_mode:
             return m
         m = self.compact(spark)
-        nm = Manifest(
+        nm = replace(
+            m,
             version=m.version + 1,
             snapshot_id=self._snapshot_id(f"convert-{m.version}-{write_mode}"),
-            n_buckets=m.n_buckets,
-            columns=[list(c) for c in m.columns],
-            renames=dict(m.renames),
-            drop_watermarks=dict(m.drop_watermarks),
-            files=dict(m.files),
-            epochs=dict(m.epochs),
-            added=list(m.added),
             summary={**m.summary, "converted_from": m.write_mode},
-            truncate_watermark=m.truncate_watermark,
-            pending_widens=dict(m.pending_widens),
             write_mode=write_mode,
-            dropped=list(m.dropped),
         )
-        with self.commit_lease():
-            cur_v = self._current_version()
-            if cur_v != m.version:
-                raise CommitConflictError(
-                    f"{self.root}: convert planned against v{m.version} but "
-                    f"CURRENT is v{cur_v} — a writer committed during the "
-                    "conversion; pause the task and re-run convert"
-                )
-            self._write_manifest(nm)
-        return nm
+        return self._commit_if_current(m, nm, "convert")
 
     def stats(self) -> dict[str, Any]:
         """Table inspection WITHOUT a Spark session — the Iceberg
@@ -1259,33 +1198,14 @@ class SnapshotTable:
                 f"was removed by vacuum (retention window); earliest "
                 f"retained versions are visible in {self.meta_dir}"
             ) from None
-        nm = Manifest(
+        nm = replace(
+            old,
             version=m.version + 1,
             snapshot_id=self._snapshot_id(f"rollback-{to_version}-at-{m.version}"),
-            n_buckets=old.n_buckets,
-            columns=[list(c) for c in old.columns],
-            renames=dict(old.renames),
-            drop_watermarks=dict(old.drop_watermarks),
-            files={k: list(v) for k, v in old.files.items()},
-            epochs=dict(old.epochs),
-            added=list(old.added),
             summary={**old.summary, "rolled_back_from": m.version,
                      "rolled_back_to": to_version},
-            truncate_watermark=old.truncate_watermark,
-            pending_widens=dict(old.pending_widens),
-            write_mode=old.write_mode,
-            dropped=list(old.dropped),
         )
-        with self.commit_lease():
-            cur_v = self._current_version()
-            if cur_v != m.version:
-                raise CommitConflictError(
-                    f"{self.root}: rollback planned against v{m.version} but "
-                    f"CURRENT is v{cur_v} — a writer committed meanwhile; "
-                    "pause the task and re-run rollback"
-                )
-            self._write_manifest(nm)
-        return nm
+        return self._commit_if_current(m, nm, "rollback")
 
     # ---- consumer version pins (retention coordination) ------------------
     # (naming helper `consumer_pin_name` lives at module level below)

@@ -15,10 +15,13 @@ Two value formats:
 
 - ``native``: one JSON document per change carrying the changelog fields
   (op/conv_id/turn_idx/payload/ddl_arg/extra, microsecond ``ts_us``).
-  ``lsn`` defaults to the Kafka offset and ``part`` to the Kafka
-  partition when the payload doesn't carry them — (partition, offset) IS
-  the MQ's native (channel, position) identity, exactly the reference's
-  MsgID model.
+  ``lsn`` defaults to ``(partition << 40) | offset`` and ``part`` to the
+  Kafka partition when the payload doesn't carry them — (partition,
+  offset) IS the MQ's native (channel, position) identity, exactly the
+  reference's MsgID model, and packing both keeps the lsn unique across
+  partitions (a bare offset repeats in every partition and trips the
+  duplicate-lsn gate). An offset ≥ 2^40 does not fit the packing and
+  decodes with a null lsn, which the malformed-event gate owns.
 - ``debezium``: the standard Debezium envelope (sources/debezium.py) —
   point the adapter at a Debezium-Connect topic and the same decode the
   file source uses runs on the Kafka value column.
@@ -83,6 +86,13 @@ NATIVE_VALUE_SCHEMA = T.StructType(
 )
 
 
+# wire-identity lsn: (partition << 40) | offset — 2^40 offsets per
+# partition; the result stays far below the 10^21 lsn bound of the packed
+# ord (operators/apply.py) for any real partition count
+_OFFSET_BITS = 40
+_OFFSET_SPAN = 1 << _OFFSET_BITS
+
+
 def decode_kafka_batch(
     wire: DataFrame,
     value_format: str = "native",
@@ -114,8 +124,13 @@ def decode_kafka_batch(
     # null op AND null lsn/ts so the malformed gate judges it, instead of
     # the offset fallback manufacturing a plausible-looking half-row
     op = F.when(known, p["op"])
+    wire_lsn = F.when(
+        F.col("offset") < F.lit(_OFFSET_SPAN),
+        F.shiftleft(F.col("partition").cast("long"), _OFFSET_BITS)
+        .bitwiseOR(F.col("offset")),
+    )
     cols = [
-        F.when(known, F.coalesce(p["lsn"], F.col("offset"))).alias("lsn"),
+        F.when(known, F.coalesce(p["lsn"], wire_lsn)).alias("lsn"),
         F.when(
             known,
             F.coalesce(

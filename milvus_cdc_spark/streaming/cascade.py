@@ -171,7 +171,6 @@ def cascade_epoch(
     *,
     to_version: int | None = None,
     epoch: int | None = None,
-    salt_partitions: int | None = None,
 ) -> dict[str, Any]:
     """One cascade hop: move ``dst`` forward by ``src``'s diff between
     ``from_version`` and ``to_version`` (default: src CURRENT).
@@ -240,11 +239,7 @@ def cascade_epoch(
         ops = ddl.unionByName(ops)
 
     res = apply_batch(
-        spark,
-        dst,
-        ops,
-        epoch if epoch is not None else to_version,
-        salt_partitions=salt_partitions,
+        spark, dst, ops, epoch if epoch is not None else to_version
     )
     res["from_version"] = from_version
     res["to_version"] = to_version
@@ -255,8 +250,6 @@ def snapshot_hop(
     spark: SparkSession,
     src: SnapshotTable,
     dst: SnapshotTable,
-    *,
-    salt_partitions: int | None = None,
 ) -> dict[str, Any]:
     """Full-snapshot bootstrap hop: apply ``src`` CURRENT as insert
     envelopes in ONE epoch committed at the current source version — the
@@ -268,10 +261,7 @@ def snapshot_hop(
     m = src.current()
     phys = {m.logical_name(n): n for n, _t in m.columns}
     full = src.read(spark).withColumn("change_type", F.lit("insert"))
-    res = apply_batch(
-        spark, dst, changes_to_ops(full, phys), m.version,
-        salt_partitions=salt_partitions,
-    )
+    res = apply_batch(spark, dst, changes_to_ops(full, phys), m.version)
     res["from_version"] = None
     res["to_version"] = m.version
     res["snapshot_bootstrap"] = True
@@ -285,7 +275,6 @@ def cascade_until_current(
     from_version: int,
     *,
     hop_versions: int | None = None,
-    salt_partitions: int | None = None,
 ) -> list[dict[str, Any]]:
     """Catch ``dst`` up to ``src`` CURRENT in one or more hops.
 
@@ -322,9 +311,7 @@ def cascade_until_current(
                 "keep_versions."
             )
         else:
-            results.append(
-                snapshot_hop(spark, src, dst, salt_partitions=salt_partitions)
-            )
+            results.append(snapshot_hop(spark, src, dst))
             src.pin_version(
                 consumer_pin_name(dst.root, "cascade"),
                 results[-1]["to_version"],
@@ -334,10 +321,7 @@ def cascade_until_current(
     while v < cur:
         nxt = min(cur, v + hop_versions) if hop_versions else cur
         results.append(
-            cascade_epoch(
-                spark, src, dst, v,
-                to_version=nxt, salt_partitions=salt_partitions,
-            )
+            cascade_epoch(spark, src, dst, v, to_version=nxt)
         )
         v = nxt
         # retention coordination: advance the pin PER HOP (not once at

@@ -175,7 +175,6 @@ def _build_task(spark, spec, a):
             spec["table"],
             spec["checkpoint"],
             hop_versions=spec.get("hop_versions", a.hop_versions),
-            salt_partitions=spec.get("salt_partitions", a.salt),
             write_mode=spec.get("write_mode", a.write_mode),
             auto_compact_files=spec.get(
                 "auto_compact_files", a.auto_compact_files
@@ -192,7 +191,6 @@ def _build_task(spark, spec, a):
             collections=spec.get("collections"),
             excludes=spec.get("excludes") or (),
             hop_versions=spec.get("hop_versions", a.hop_versions),
-            salt_partitions=spec.get("salt_partitions", a.salt),
             write_mode=spec.get("write_mode", a.write_mode),
             auto_compact_files=spec.get(
                 "auto_compact_files", a.auto_compact_files
@@ -202,7 +200,6 @@ def _build_task(spark, spec, a):
         max_files_per_trigger=spec.get(
             "max_files_per_trigger", a.max_files_per_trigger
         ),
-        salt_partitions=spec.get("salt_partitions", a.salt),
         n_buckets=spec.get("n_buckets", a.n_buckets),
         write_mode=spec.get("write_mode", a.write_mode),
         auto_compact_files=spec.get("auto_compact_files", a.auto_compact_files),
@@ -291,7 +288,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="delete: also remove the checkpoint dir")
     p.add_argument("--master", default=None)
     p.add_argument("--max-files-per-trigger", type=int, default=4)
-    p.add_argument("--salt", type=int, default=None)
     p.add_argument("--n-buckets", type=int, default=16)
     p.add_argument("--duration-sec", type=float, default=60.0, help="tail runtime")
     p.add_argument("--max-failures", type=int, default=3,
@@ -674,8 +670,7 @@ def main(argv: list[str] | None = None) -> int:
             eps = [int(e) for e in dst.current().epochs if int(e) >= 0]
             from_v = max(eps) if eps else 0
         hops = cascade_until_current(
-            spark, src, dst, from_v,
-            hop_versions=a.hop_versions, salt_partitions=a.salt,
+            spark, src, dst, from_v, hop_versions=a.hop_versions
         )
         print(json.dumps({
             "src": a.src_table, "table": a.table, "from_version": from_v,
@@ -707,7 +702,6 @@ def main(argv: list[str] | None = None) -> int:
             SnapshotTable(table_root),
             spark.read.parquet(a.snapshot),
             n_buckets=a.n_buckets,
-            salt_partitions=a.salt,
             write_mode=a.write_mode,
         )
         keep = ("epoch", "skipped", "n_events", "n_keys_live_in_touched",
@@ -745,7 +739,6 @@ def main(argv: list[str] | None = None) -> int:
                     "src_table": a.src_table, "table": a.table,
                     "checkpoint": a.checkpoint,
                     "hop_versions": a.hop_versions,
-                    "salt_partitions": a.salt,
                     "write_mode": a.write_mode,
                     "auto_compact_files": a.auto_compact_files,
                 }
@@ -758,7 +751,7 @@ def main(argv: list[str] | None = None) -> int:
                 "tables_root": a.tables_root, "checkpoint": a.checkpoint,
                 "collections": _csv(a.collections),
                 "excludes": _csv(a.excludes) or [],
-                "hop_versions": a.hop_versions, "salt_partitions": a.salt,
+                "hop_versions": a.hop_versions,
                 "write_mode": a.write_mode,
                 "auto_compact_files": a.auto_compact_files,
             }
@@ -770,7 +763,7 @@ def main(argv: list[str] | None = None) -> int:
             spec_fields = {
                 "log": a.log, "checkpoint": a.checkpoint,
                 "max_files_per_trigger": a.max_files_per_trigger,
-                "salt_partitions": a.salt, "n_buckets": a.n_buckets,
+                "n_buckets": a.n_buckets,
                 "write_mode": a.write_mode,
                 "auto_compact_files": a.auto_compact_files,
                 "on_malformed": a.on_malformed,

@@ -361,7 +361,6 @@ class _FileTask(_TaskLifecycle):
         checkpoint_dir: str,
         *,
         max_files_per_trigger: int | None = 4,
-        salt_partitions: int | None = None,
         n_buckets: int = 16,
         write_mode: str = "cow",
         auto_compact_files: int | None = None,
@@ -406,7 +405,6 @@ class _FileTask(_TaskLifecycle):
         self.source = source
         self.kafka_options = dict(kafka_options or {})
         self.max_files_per_trigger = max_files_per_trigger
-        self.salt_partitions = salt_partitions
         self.n_buckets = n_buckets
         self.write_mode = write_mode
         # merge-on-read housekeeping: compact at the NEXT epoch boundary
@@ -604,7 +602,6 @@ class CdcTask(_FileTask):
             self.table,
             batch_df,
             epoch,
-            salt_partitions=self.salt_partitions,
             on_malformed=self.on_malformed,
             constraints=self.constraints,
             on_violation=self.on_violation,
@@ -954,7 +951,6 @@ class MultiCdcTask(_FileTask):
                 tables[name],
                 df,
                 epoch_id,
-                salt_partitions=self.salt_partitions,
                 on_malformed=self.on_malformed,
                 constraints=self.constraints,
                 on_violation=self.on_violation,
@@ -1080,7 +1076,6 @@ class CascadeTask(_TaskLifecycle):
         checkpoint_dir: str,
         *,
         hop_versions: int | None = None,
-        salt_partitions: int | None = None,
         n_buckets: int | None = None,
         write_mode: str = "cow",
         poll_sec: float = 0.5,
@@ -1097,7 +1092,6 @@ class CascadeTask(_TaskLifecycle):
                 n_buckets=n_buckets, write_mode=write_mode,
             )
         self.hop_versions = hop_versions
-        self.salt_partitions = salt_partitions
         self.poll_sec = poll_sec
         self.auto_compact_files = auto_compact_files
         self._init_lifecycle(checkpoint_dir)
@@ -1123,7 +1117,6 @@ class CascadeTask(_TaskLifecycle):
             self.table,
             from_v,
             hop_versions=self.hop_versions,
-            salt_partitions=self.salt_partitions,
         )
         self._maybe_compact(self.table)
         return True
@@ -1300,7 +1293,6 @@ class MultiCascadeTask(_TaskLifecycle):
         collections: list[str] | None = None,
         excludes: list[str] | tuple = (),
         hop_versions: int | None = None,
-        salt_partitions: int | None = None,
         write_mode: str = "cow",
         poll_sec: float = 0.5,
         auto_compact_files: int | None = None,
@@ -1311,7 +1303,6 @@ class MultiCascadeTask(_TaskLifecycle):
         self.tables_root = tables_root
         self.filter = CollectionFilter(collections, excludes)
         self.hop_versions = hop_versions
-        self.salt_partitions = salt_partitions
         self.write_mode = write_mode
         self.poll_sec = poll_sec
         self.auto_compact_files = auto_compact_files
@@ -1350,7 +1341,6 @@ class MultiCascadeTask(_TaskLifecycle):
             dst,
             self._position(dst),
             hop_versions=self.hop_versions,
-            salt_partitions=self.salt_partitions,
         )
         self._maybe_compact(dst)
 

@@ -12,9 +12,6 @@ the measurement that it works:
     partial combine — a million duplicate events for one key reduce to
     one row per map task before the shuffle, so the reduce side sees
     O(#map_tasks), not O(#events);
-  - the explicit two-stage salted reduction (operators/apply.py::
-    dedup_last_writer(salt_partitions=...)) covers the residual case of
-    a single key too hot for one reducer;
   - AQE skew-join splitting is on (session.py) for the merge join.
 
 Protocol matches scripts/bench_scaling.py: fresh subprocess JVM per

@@ -46,7 +46,7 @@ def _oracle_rows(oracle_result):
     return sorted(tuple(r[c] for c in scols) for r in rows), scols
 
 
-def _apply_in_batches(spark, table_root, changelog, n_batches, **kw):
+def _apply_in_batches(spark, table_root, changelog, n_batches):
     from milvus_cdc_spark.schemas import TRANSCRIPTS_BASE_COLUMNS
 
     table = SnapshotTable(table_root)
@@ -55,7 +55,7 @@ def _apply_in_batches(spark, table_root, changelog, n_batches, **kw):
     step = (N + n_batches - 1) // n_batches
     for i in range(n_batches):
         batch = log.filter((F.col("lsn") >= i * step) & (F.col("lsn") < (i + 1) * step))
-        apply_batch(spark, table, batch, epoch=i, **kw)
+        apply_batch(spark, table, batch, epoch=i)
     return table
 
 
@@ -69,15 +69,6 @@ def test_single_batch_matches_oracle(spark, changelog, oracle_result, tmp_path):
 
 def test_multi_batch_matches_oracle(spark, changelog, oracle_result, tmp_path):
     table = _apply_in_batches(spark, str(tmp_path / "t2"), changelog, 7)
-    got, _ = _table_rows(spark, table)
-    want, _ = _oracle_rows(oracle_result)
-    assert got == want
-
-
-def test_salted_dedup_same_result(spark, changelog, oracle_result, tmp_path):
-    table = _apply_in_batches(
-        spark, str(tmp_path / "t3"), changelog, 3, salt_partitions=8
-    )
     got, _ = _table_rows(spark, table)
     want, _ = _oracle_rows(oracle_result)
     assert got == want

@@ -210,6 +210,14 @@ def test_cli_lifecycle_roundtrip(spark, tmp_path):
         "--master", "local[2]",
     )
     assert st["epochs_committed"] == 0
+    # a spec written by an older release still carries the removed
+    # "salt_partitions" key: it must be ignored, and the task still drains
+    spec_path = os.path.join(tasks_dir, "t1.json")
+    with open(spec_path) as f:
+        spec = json.load(f)
+    spec["salt_partitions"] = 8
+    with open(spec_path, "w") as f:
+        json.dump(spec, f)
 
     # pause + list need no Spark and no running process
     assert cli("pause", "--name", "t1", "--tasks-dir", tasks_dir)["pause_requested"]

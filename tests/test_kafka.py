@@ -66,7 +66,8 @@ def test_native_decode_and_mq_identity_fallback(spark):
             ("c1", _native(lsn=7, ts_us=1_700_000_000_000_123, part=2,
                            conv_id="c1", turn_idx=1, role="user",
                            text="hi", tool=None), 0, 100, 1_700_000_001_000),
-            # identity from the wire: lsn=offset, part=partition, ts=broker
+            # identity from the wire: lsn=(partition << 40) | offset,
+            # part=partition, ts=broker
             ("c2", _native(op="UPSERT", conv_id="c2", turn_idx=3,
                            role="assistant", text="yo"), 1, 101,
              1_700_000_002_000),
@@ -80,13 +81,39 @@ def test_native_decode_and_mq_identity_fallback(spark):
     assert (a["lsn"], a["part"], a["op"]) == (7, 2, "INSERT")
     assert a["ts"].microsecond == 123
     b = got["c2"]
-    assert (b["lsn"], b["part"], b["op"]) == (101, 1, "UPSERT")
+    assert (b["lsn"], b["part"], b["op"]) == ((1 << 40) | 101, 1, "UPSERT")
     from datetime import datetime, timezone
 
     want_ts = datetime.fromtimestamp(
         1_700_000_002, tz=timezone.utc
     ).replace(tzinfo=None)
     assert b["ts"] == want_ts  # broker timestamp fallback
+
+
+def test_wire_lsn_unique_across_partitions(spark, tmp_path):
+    """Two partitions at the same offset, no payload lsn: the fallback
+    lsns differ, so the batch applies without tripping the duplicate-lsn
+    gate. An offset past the 40-bit packing decodes with a null lsn."""
+    ts = 1_700_000_000_000_000
+    wire = _wire(
+        spark,
+        [
+            ("c1", _native(conv_id="c1", turn_idx=1, text="a", ts_us=ts),
+             0, 5, 0),
+            ("c2", _native(conv_id="c2", turn_idx=1, text="b", ts_us=ts),
+             1, 5, 0),
+        ],
+    )
+    dec = decode_kafka_batch(wire)
+    assert sorted(r["lsn"] for r in dec.collect()) == [5, (1 << 40) | 5]
+    t = SnapshotTable(str(tmp_path / "kafka_parts_t"))
+    t.create(S.TRANSCRIPTS_BASE_COLUMNS, n_buckets=2)
+    res = apply_batch(spark, t, dec, epoch=0)
+    assert res["n_events"] == 2
+    assert sorted(r["conv_id"] for r in t.read(spark).collect()) == ["c1", "c2"]
+
+    big = _wire(spark, [("c3", _native(conv_id="c3", turn_idx=1), 0, 1 << 40, 0)])
+    assert decode_kafka_batch(big).collect()[0]["lsn"] is None
 
 
 def test_decode_malformed_and_unknown_ops_route_to_poison_gate(

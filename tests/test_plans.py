@@ -110,31 +110,50 @@ def test_merge_join_output_is_write_partitioned(spark, tmp_path):
     pre-partitioning: exactly TWO Exchanges (one per side, REPARTITION_BY_NUM)
     and NONE above the join — the merged rows go straight to the bucket-
     partitioned write. A third Exchange means requireAllClusterKeysForCoPartition
-    regressed or the join keys no longer cover the partitioning columns."""
-    from milvus_cdc_spark.operators.apply import merge_actions
+    regressed or the join keys no longer cover the partitioning columns.
+    Checked for both merges: anchor-only actions (``merge_actions``) and
+    patch-composed actions (``merge_patched_actions``)."""
+    from milvus_cdc_spark.operators.apply import (
+        compose_patch_actions,
+        merge_actions,
+        merge_patched_actions,
+    )
 
     log = generate_changelog(
         spark, 4000, n_parts=4, n_convs=30, turns_per_conv=6,
-        evolve=False, drops=False,
+        evolve=False, drops=False, patch_pct=30,
     )
     t = SnapshotTable(str(tmp_path / "t"))
     t.create(S.TRANSCRIPTS_BASE_COLUMNS, n_buckets=4, overwrite=True)
     apply_batch(spark, t, log.filter(F.col("lsn") < 2000), epoch=0)
     m = t.current()
-    carry = list(S.PAYLOAD_COLUMNS) + ["extra"]
+    payload = list(S.PAYLOAD_COLUMNS)
+    carry = payload + ["extra"]
     dml = log.filter((F.col("lsn") >= 2000) & F.col("op").isin(*S.DML_OPS))
-    actions = dedup_last_writer(dml, carry)
+    assert dml.filter(F.col("op") == S.OP_PATCH).count() > 0
     target = t.read(spark, manifest=m, logical=False)
-    merged = merge_actions(target, actions, carry, m.n_buckets, write_factor=2)
-    plan = _plan(merged)
-    join_part, _, above = plan.partition("ShuffledHashJoin")
-    assert join_part.count("Exchange") == 0, (
-        "Exchange above the merge join — merged rows re-shuffle before the "
-        "write:\n" + join_part
-    )
-    assert "FullOuter" in above.splitlines()[0]
-    # the two child exchanges are the explicit (_bucket, _wsalt) repartitions
-    assert above.count("Exchange hashpartitioning(_bucket") == 2, plan
+    anchors = dml.filter(F.col("op") != S.OP_PATCH)
+    merges = {
+        "merge_actions": merge_actions(
+            target, dedup_last_writer(anchors, carry), carry, m.n_buckets,
+            write_factor=2,
+        ),
+        "merge_patched_actions": merge_patched_actions(
+            target, compose_patch_actions(dml, carry, payload), carry,
+            m.n_buckets, write_factor=2,
+        ),
+    }
+    for name, merged in merges.items():
+        plan = _plan(merged)
+        join_part, _, above = plan.partition("ShuffledHashJoin")
+        assert join_part.count("Exchange") == 0, (
+            f"{name}: Exchange above the merge join — merged rows re-shuffle "
+            "before the write:\n" + join_part
+        )
+        assert "FullOuter" in above.splitlines()[0], name
+        # the two child exchanges are the explicit (_bucket, _wsalt)
+        # repartitions
+        assert above.count("Exchange hashpartitioning(_bucket") == 2, plan
 
 
 def test_session_has_aqe_and_arrow(spark):

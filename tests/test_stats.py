@@ -96,3 +96,28 @@ def test_stats_cli_verb_no_spark(spark, tmp_path):
     name = next(iter(payload))
     assert payload[name]["physical_rows"] > 0
     assert payload[name]["n_buckets"] == 4
+
+
+def test_epoch_log_record_carries_timings_and_lag(spark, tmp_path, caplog):
+    """Every committed epoch emits one record on the
+    ``milvus_cdc_spark.apply`` logger with epoch, n_events, the phase
+    timings and lag_sec; a replayed (skipped) epoch emits none."""
+    import logging
+
+    log = generate_changelog(spark, 600, n_parts=2, n_convs=10, turns_per_conv=6)
+    t = SnapshotTable(str(tmp_path / "t_log"))
+    t.create(S.TRANSCRIPTS_BASE_COLUMNS, n_buckets=2)
+    caplog.set_level(logging.INFO, logger="milvus_cdc_spark.apply")
+    res = apply_batch(spark, t, log, epoch=0)
+    assert apply_batch(spark, t, log, epoch=0)["skipped"]
+    recs = [r for r in caplog.records if r.name == "milvus_cdc_spark.apply"]
+    assert len(recs) == 1
+    r = recs[0]
+    assert (r.epoch, r.n_events) == (0, res["n_events"])
+    assert r.timings == res["timings"]
+    assert set(r.timings) >= {
+        "setup", "lineage_ddl_buckets", "dedup_plan", "merge_write",
+        "lsn_gate_wait",
+    }
+    assert r.lag_sec > 0  # synthetic events are timestamped in the past
+    assert json.loads(r.getMessage().split(" ", 2)[2])["epoch"] == 0
